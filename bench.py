@@ -61,10 +61,11 @@ def _execute(df) -> int:
     return len(df.toPandas())
 
 
-def _plan_fingerprint(df) -> str:
-    """Stable hash of the physical plan: normalize away the run-varying
-    bits (expression ids, plan ids, temp/file paths, row-count statistics)
-    so the fingerprint only moves when the plan SHAPE moves.
+def _normalized_plan(df) -> str:
+    """Executed-plan text with the run-varying bits (expression ids, plan
+    ids, temp/file paths, row-count statistics) normalized away, so it
+    only changes when the plan SHAPE changes.  Both fingerprints hash
+    this text; v2 adds its own rules on top.
 
     Scan-metadata strings (DataFilters etc.) truncate at
     spark.sql.maxMetadataStringLength BEFORE our expr-id normalization, so
@@ -87,8 +88,13 @@ def _plan_fingerprint(df) -> str:
     # lambda variables print as <name>_<global counter>#<exprid> (x_1, x_2,
     # …) — the counter depends on how many lambdas the session planned
     # earlier, so collapse it (no op alias ends in _<digits>, verified)
-    s = re.sub(r"(\w+?)_\d+#", r"\1#", s)
-    return hashlib.sha256(s.encode()).hexdigest()[:12]
+    return re.sub(r"(\w+?)_\d+#", r"\1#", s)
+
+
+def _plan_fingerprint(df) -> str:
+    """Stable hash of the normalized physical plan (legacy form, kept so
+    results compare with BENCH_r02's baseline fingerprints)."""
+    return hashlib.sha256(_normalized_plan(df).encode()).hexdigest()[:12]
 
 
 def _sort_bracket_segments(s: str) -> str:
@@ -166,16 +172,7 @@ def _plan_fingerprint_v2(df) -> str:
     bracket-segment sorting (see _sort_bracket_segments).  PLANS.json pins
     v2 from r03 on; bench.py keeps emitting the legacy value alongside so
     BENCH_r03 stays comparable with BENCH_r02's baseline fingerprints."""
-    df.sparkSession.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    s = df._jdf.queryExecution().executedPlan().toString()
-    s = re.sub(r"#\d+[A-Z]*", "#", s)
-    s = re.sub(r"plan_id=\d+", "plan_id=", s)
-    s = re.sub(r"(file|hdfs|s3a?):[^,\]\s\)]+", r"\1:", s)
-    s = re.sub(r"Statistics\([^)]*\)", "Statistics()", s)
-    s = re.sub(r"\b\d+(\.\d+)?\s*(B|KiB|MiB|GiB)\b", "", s)
-    s = re.sub(r"\S*\.\.\.", "...", s)
-    s = re.sub(r"\b(b_\w+?_)[0-9a-f]{12}\b", r"\1", s)
-    s = re.sub(r"(\w+?)_\d+#", r"\1#", s)
+    s = _normalized_plan(df)
     # RewriteDistinctAggregates numbers its distinct groups (gid) in
     # exprId-hash order too: which count() gets FILTER (gid = 1) vs
     # (gid = 2) swaps across sessions, and the Expand projections carry
@@ -189,6 +186,13 @@ def _plan_fingerprint_v2(df) -> str:
     # runs workers at cpus//n_shards and ts_partial_autocorrelation's
     # pin flipped).
     s = re.sub(r"splits=\d+", "splits=", s)
+    # repartition(defaultParallelism[, cols]) prints that count as the last
+    # argument of hashpartitioning(…, N) / RoundRobinPartitioning(N) — the
+    # same knob, so replace N only when it equals this session's
+    # defaultParallelism; any other count (a hard-coded repartition(16))
+    # still moves the fingerprint.
+    n = df.sparkSession.sparkContext.defaultParallelism
+    s = re.sub(rf"(?<=[(, ]){n}\), REPARTITION_BY_NUM", "P), REPARTITION_BY_NUM", s)
     s = "\n".join(
         re.sub(r"\b\d+\b", "N", ln) if "Expand [" in ln else ln
         for ln in s.splitlines()

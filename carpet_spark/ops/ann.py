@@ -122,8 +122,7 @@ def banded_signatures(
     against `planes`, chunked into bands, band index carried in the sig's
     high bits so signatures from different bands can never equi-match.
     One Arrow mapInPandas matmul per batch; shared by the registered pair
-    ops (module constants) and scripts/ann_scale_probe.py (production
-    banding — the constants are deployment-tunable, see the note above)."""
+    ops (module constants; deployment-tunable, see the note above)."""
 
     def bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -235,8 +234,8 @@ def dedup_near_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall vs the exact op is pinned in tests/test_property.py.  The
     candidate join is an equi shuffle join on the band signature — no
     BroadcastNestedLoopJoin anywhere in the plan (plan-asserted).
-    Scaling of the production-banding regime is measured in SCALE.md via
-    scripts/ann_scale_probe.py on this same semantic_pair_dedup path."""
+    Scaling of the production-banding regime on this same
+    semantic_pair_dedup path is recorded in SCALE.md."""
     d = load(spark, sf_dir, "documents").select("doc_id")
     e = load(spark, sf_dir, "embeddings")
     j = d.join(e, d.doc_id == e.vec_id).select("doc_id", "embedding")
@@ -256,8 +255,8 @@ def knn_join_topk(
     """Batch k-NN join over (vec_id, label, embedding) rows: label=1 rows
     are the query side; banded-SRP equi join generates candidates, exact
     double cosine re-scores, a per-query window keeps top-k.  Parameterized
-    so scripts/ann_scale_probe.py can measure the production-banding regime
-    on this same code path."""
+    by the banding so the production-banding regime runs on this same code
+    path (SCALE.md)."""
     bands = banded_signatures(e, planes, n_bands, n_bits, id_cols=("vec_id", "label"))
     qb = bands.filter(F.col("label") == 1).select(
         F.col("vec_id").alias("q_id"), "sig"
@@ -337,8 +336,8 @@ def sim_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no per-query scan.  Exact double cosine re-scores candidates and a
     per-query window (partitioned by q_id — one shuffle) keeps the top-3.
     Recall vs per-query brute force is pinned in tests/test_property.py.
-    Scaling of the production-banding regime is measured in SCALE.md via
-    scripts/ann_scale_probe.py on this same knn_join_topk path."""
+    Scaling of the production-banding regime on this same knn_join_topk
+    path is recorded in SCALE.md."""
     e = load(spark, sf_dir, "embeddings")
     return knn_join_topk(e, _pair_planes(), _PAIR_BANDS, _PAIR_BITS, _KNN_K)
 

@@ -236,7 +236,7 @@ def _nullable_long(values: list) -> pd.Series:
 # records — a UDF that turns a 300-byte text row into a ~100 KB raster
 # payload amplifies a modest input batch into a multi-hundred-MB Arrow
 # output buffer, and 32 concurrent tasks then exhaust the JVM's direct
-# memory (found by scripts/mm_scale_probe.py at 10x volume: netty
+# memory (found at 10x raster volume, SCALE.md "Raster decode tier": netty
 # OutOfDirectMemoryError at 8 GB).  Every binary-emitting UDF below
 # yields through _bounded_slices so no single output batch exceeds this,
 # independent of cluster conf.  Sizing: netty's pooled allocator holds

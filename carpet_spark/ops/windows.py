@@ -44,9 +44,9 @@ def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bench-plan decision, pinned by measurement (r07 VERDICT item 6): the
     bench deliberately runs THIS naive single-window plan, not the salted
-    two-phase rewrite.  scripts/skew_scale_probe.py at 40M rows with a
-    50%-hot group measured plain rank 3.2 s vs salted two-phase 3.7 s on
-    local[32] (SCALE.md "Skew mitigation, measured"): on one host the
+    two-phase rewrite.  At 40M rows with a 50%-hot group, plain rank
+    measured 3.2 s vs salted two-phase 3.7 s on local[32] (SCALE.md
+    "Skew mitigation, measured"): on one host the
     straggler partition still fits a core, so the extra shuffle the
     two-phase plan adds only costs.  The §2 oracle also pins FULL rank
     output (every row, exact ties), which the salted rewrite cannot

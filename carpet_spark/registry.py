@@ -66,518 +66,11 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# Driver-window ordering (r02 VERDICT items 1-3): the driver's CORRECTNESS
-# run covers the FIRST 50 entries of queries().  Rounds 1+2 verified 99 ops
-# (CORRECTNESS_r01/r02; all stay pinned by tests/test_oracle_parity.py), so
-# round 3 leads with the 13 §2 ids that have never had a driver row —
-# fn_array (r02's one FAIL, now fixed: array outputs projected to
-# space-joined strings so the driver's pandas canonicalizer can hash them)
-# plus the 9 hash-able and 3 rows-only-by-design stragglers — after which
-# EVERY SURVEY §2 id has a driver CORRECTNESS entry.  The window is filled
-# with the TPC-H suite (q2-q22), the two headline bench queries that were
-# never rotated in, the trainprep family, and timeseries.  Within the
-# window, cheap ops come before expensive ones so a time-based cutoff (the
-# other possible driver behavior) still maximizes coverage.  Every op here
-# was audited this round for array/map-typed output columns (none — the
-# driver canonicalizer cannot hash those, SURVEY §7.5).
-# Round-11 window (r10 VERDICT item 1): the literal contents of the
-# committed burn-down plan's `_PLANNED_WINDOWS[11]` entry, rotated in at
-# round start exactly as planned (key 11 removed from the dict below; the
-# r10 window — a perfect 50/50 hash-pass, CORRECTNESS_r10 — is parked in
-# `_R10_VERIFIED`).  Heads: the two deliberate re-banks whose only driver
-# rows are vacuous (`dedup_containment_pairs` r9, `text_collocations_pmi`
-# r8 — both re-parameterized non-vacuous in r10: %9 → %3 slice / support
-# floor 50 → 20, expected 3 and 20 rows at sf0.01), then 48 first-time
-# samples off the r02-verdict user-value queue.  48 first-time samples
-# bring cumulative driver coverage 485 → 533 of 694 when green (the r10
-# verdict's exact target).  All 50 carry hash oracles (fifth consecutive
-# all-hash window); the window was pre-probed 100/100 driver-faithful
-# hash-pass at sf0.01 + sf0.001 at r10 final HEAD and re-probed after
-# this rotation (vacuity preflight included — all 50 return >0 rows).
-_PRIORITY_WINDOW = (
-    "dedup_containment_pairs", "text_collocations_pmi",
-    "sink_manifest_publish",
-    "join_basket_containment", "sink_row_hash_audit",
-    "join_nearest_numeric", "agg_slo_burn_rate",
-    "fn_route_pattern_match", "ab_sample_ratio_mismatch",
-    "ab_cuped_adjustment", "sql_group_by_all", "fn_semver_order",
-    "agg_bcg_matrix", "ts_diff_correlation",
-    "ts_compound_growth_index", "agg_reference_percentile_rank",
-    "dq_rare_categories", "ts_twap_daily", "sql_distinct_on",
-    "attribution_shapley_two_channel",
-    "sample_weighted_no_replacement", "fn_iban_mod97",
-    "text_ocr_normalize", "text_script_detect", "agg_ar_aging_buckets",
-    "pii_hash_join_integrity", "text_bigram_logprob",
-    "sample_group_kfold", "agg_basket_size_dist",
-    "agg_growth_accounting", "agg_churn_risk_recency",
-    "text_intradoc_dedup", "text_trending_tokens",
-    "fn_progressive_brackets", "ts_dominant_period",
-    "scan_glob_subset", "agg_cohort_payback_month",
-    "fn_number_humanize", "agg_stickiness_dau_mau",
-    "ab_mann_whitney_u", "fn_uuid_deterministic",
-    "sample_reservoir_fixed_n", "ts_cross_correlation_lags",
-    "scan_fixed_width", "agg_anova_oneway", "agg_theil_index",
-    "text_js_divergence_sources", "emb_isotropy_score",
-    "agg_kendall_tau", "win_weighted_moving_average",
-)
-
-# Rotation-debt burn-down plan (r09 VERDICT item 6): the committed window
-# order for the REMAINING rounds 12-15, so each future rotation is a
-# LOOKUP, not a decision — at round N start, park the previous window in
-# _R{N-1}_VERIFIED and copy _PLANNED_WINDOWS[N] into _PRIORITY_WINDOW
-# (then re-probe it with scripts/driver_window_probe.py, whose vacuity
-# preflight and oracle check may force swaps; record any swap in the
-# window comment).  The plan is the r02-verdict user-value ordering (the
-# former _R4_QUEUE, which this dict supersedes as the single source of
-# truth) minus everything banked through r10 and minus the r11 window
-# above (rotated in live this round per plan).  Five re-banks total:
-# two vacuous (head the live r11 window above) and three STALE —
-# ts_pacing_vs_target, emb_label_centroids and agg_inventory_turns_gmroi,
-# whose non-vacuous banks predate the r10 sf0.1 sweep / magnitude scan
-# forcing their money/mean displays from float round onto exact integer
-# arithmetic (round(x,6) at 1e9+ magnitude / on an exact 6dp tie splits
-# between engines).  Per r10 VERDICT item 2 those three were PULLED
-# FORWARD from the r15 tail to the r12 head (the three displaced r12 ops
-# — ts_partial_autocorrelation, agg_mcnemar_test, dq_hash_collision_audit
-# — moved to r15, keeping both windows ≤50).  After r15 every registered
-# op has a current non-vacuous external bank.
-# tests/test_window.py::test_planned_windows_* pin plan/registry consistency.
-_PLANNED_WINDOWS: dict[int, tuple[str, ...]] = {
-    12: (
-        # stale-display re-banks pulled forward from r15 (r10 VERDICT #2)
-        "ts_pacing_vs_target", "emb_label_centroids",
-        "agg_inventory_turns_gmroi",
-        "ts_bollinger_bands", "agg_chi_square_gof", "text_hapax_ratio", "fn_fiscal_calendar_445",
-        "fn_slugify", "dq_table_fingerprint", "ts_velocity_acceleration",
-        "agg_runlength_events", "sql_order_by_all",
-        "pii_subject_access_export", "fn_label_encode",
-        "fn_one_hot_encode", "sink_csv_gzip_roundtrip",
-        "sink_parquet_zstd_roundtrip", "agg_atkinson_index", "ts_var_cvar",
-        "agg_kmv_cardinality", "agg_entropy_daily", "win_rolling_skewness",
-        "agg_quantile_normalize", "fn_excel_serial_date",
-        "ts_underwater_duration", "agg_mood_median_test",
-        "agg_capture_recapture", "sample_neyman_allocation",
-        "fn_round_half_even", "agg_poisson_rate_ci", "agg_cohen_h",
-        "win_new_users_cumulative", "sim_threshold_sweep",
-        "text_heaps_law", "agg_recency_decay_score",
-        "pii_small_cell_suppress", "agg_overdispersion_index",
-        "ts_fourier_weekly_fit", "ab_bayesian_shrinkage",
-        "sim_srp_bucket_histogram", "agg_friedman_test",
-        "agg_weighted_median", "geo_tile_quadkey", "scan_csv_dateformat",
-        "ts_theil_sen_slope", "dq_benford_second_digit",
-        "win_gap_to_leader", "agg_delta_method_ratio_ci",
-        "fn_target_encode", "emb_class_separability",
-    ),
-    13: (
-        "agg_wilcoxon_signed_rank", "agg_contingency_residuals", "ab_cochran_armitage_trend",
-        "agg_price_endings_profile", "agg_hurst_rescaled_range",
-        "fn_iso_week_boundaries", "sample_ipw_ess", "fn_checkdigit_ean13",
-        "dq_penny_drift_audit", "ts_day_percentile_vs_history",
-        "agg_log_return_volatility", "ts_month_seasonal_index",
-        "agg_customer_tenure_dist", "sink_tsv_roundtrip",
-        "agg_hhi_yearly_trend", "feature_robust_scale",
-        "feature_cyclical_encode", "sql_exists_correlated",
-        "sql_values_dim_join", "ts_stochastic_oscillator",
-        "ts_donchian_breakout", "ts_obv_indicator", "agg_cr_concentration",
-        "agg_quartile_dispersion", "ts_pivot_points_daily",
-        "ts_range_expansion", "pii_date_shift_consistent",
-        "pii_generalize_timestamp", "text_shingle_jaccard_langs",
-        "win_session_position", "join_temporal_validity_intersect",
-        "dq_timeliness_lag_profile", "agg_interpurchase_time_cv",
-        "agg_weekday_weekend_split", "emb_centroid_drift_report",
-        "join_late_arriving_dim", "win_views_per_purchase",
-        "stream_windowed_topk", "profile_temporal_coverage",
-        "agg_share_of_parent_hierarchy", "agg_littles_law_check",
-        "text_vocab_coverage_topk", "ts_week_over_week_same_dow",
-        "agg_next_basket_pairs", "sink_parquet_bloom_roundtrip",
-        "ts_intraday_volume_curve", "dq_schema_contract_check",
-        "ts_timezone_shift_report", "agg_reorder_point_calc",
-        "ts_apdex_score",
-    ),
-    14: (
-        "udf_pandas_grouped_forecast", "attribution_time_decay", "stream_alert_episodes",
-        "dq_split_leakage_check", "agg_forecast_reconciliation_topdown",
-        "agg_price_index_laspeyres", "join_match_waterfall",
-        "cdc_scd2_apply_batch", "dq_scd2_interval_audit",
-        "agg_queueing_mm1_metrics", "ab_sequential_obf",
-        "sql_named_window_clause", "ts_effective_sample_size",
-        "ts_seasonal_adjustment_dow", "agg_hill_tail_index",
-        "dq_manifest_orphan_audit", "agg_margin_waterfall",
-        "join_fx_asof_convert", "dq_balance_reconciliation_three_way",
-        "agg_repeat_rate_by_first_value", "agg_unit_economics_summary",
-        "pii_l_diversity_check", "profile_candidate_keys",
-        "sample_pps_systematic", "emb_hubness_topk",
-        "fn_largest_remainder_allocation", "agg_demand_intermittency_sbc",
-        "text_mattr_lexical_diversity", "dq_benford_mad_conformity",
-        "pii_kanon_utility_curve", "ab_interaction_check",
-        "ts_load_duration_curve", "ts_forecaster_bakeoff",
-        "agg_dso_days_sales_outstanding", "dq_join_fanout_estimate",
-        "text_blocklist_screen", "dq_survivorship_bias_probe",
-        "ab_mde_current_power", "ts_calendarized_run_rate",
-        "scan_delimiter_sniff", "dq_fx_triangulation_audit",
-        "ab_bucketing_uniformity", "emb_mean_pooling_tokens",
-        "ts_peak_dow_shift", "fn_month_boundary_features",
-        "ab_itt_vs_perprotocol", "agg_month_end_lift",
-        "dq_event_order_audit", "agg_discount_response_curve",
-        "dq_doc_embedding_coverage",
-    ),
-    15: (
-        # displaced from r12 by the pulled-forward stale-display re-banks
-        "ts_partial_autocorrelation", "agg_mcnemar_test",
-        "dq_hash_collision_audit",
-        # re-banks: non-vacuous banks gone stale when the r11 near-cliff
-        # probe forced their displays off float rounds (price-volume-mix
-        # effects unrounded + exact-int delta; seasonality SS rebuilt as
-        # exact integer closed forms with the hi/lo conversion split;
-        # the three recurrence ops' money displays emitted unrounded —
-        # folds proven bit-identical cross-engine at three SFs)
-        "agg_price_volume_mix", "ts_seasonality_strength",
-        "ts_holt_linear_smoothing", "ts_holt_winters_additive",
-        "ts_ar1_forecast_backtest", "agg_allocation_by_share",
-        "agg_dormant_skus", "agg_time_to_nth_purchase", "dq_cdc_scd2_consistency",
-        "agg_mixed_discount_baskets", "agg_cart_abandonment_by_dow",
-        "agg_return_rate_drivers", "agg_supplier_concentration_tiers",
-        "ts_event_study_window", "ab_days_to_power",
-        "ts_daily_health_score", "scan_python_datasource_pushdown",
-    ),
-}
-
-# The 50 ops the driver already hash-verified in round 1 (CORRECTNESS_r01
-# keys) — parked at the tail of the ordering.
-_R01_VERIFIED = frozenset(
-    {
-        "scan_parquet", "scan_projected", "scan_events_ns",
-        "sink_parquet_roundtrip", "sink_csv_roundtrip", "sink_json_roundtrip",
-        "sink_orc_roundtrip", "agg_global", "agg_groupby", "agg_having",
-        "agg_distinct", "agg_conditional", "project_compute",
-        "filter_compound", "filter_like_regex", "filter_null_safe",
-        "pii_drop", "pii_nullify", "pii_hash", "pii_mask_regex",
-        "pii_bucket", "pii_pipeline", "pii_kanon_check", "join_inner",
-        "join_left", "join_right", "join_full", "join_semi", "join_anti",
-        "join_cross", "join_theta_range", "join_band", "join_multiway",
-        "join_asof", "join_bucketed", "join_salted", "join_interval_events",
-        "sort_multi", "topk", "limit_offset", "set_union_all",
-        "set_union_distinct", "set_intersect", "set_except",
-        "set_intersect_all", "set_except_all", "win_rank", "win_lag_lead",
-        "win_running", "win_sliding_frame",
-    }
-)
-
-
-# The 49 ops the driver hash- or rows-verified in round 2 (CORRECTNESS_r02
-# keys minus fn_array, which errored and is back in the window) — parked at
-# the tail of the ordering alongside the r01 set.
-_R02_VERIFIED = frozenset(
-    {
-        "dedup_exact", "dedup_near_minhash", "sim_cosine_topk",
-        "text_tokenize_wordcount", "stream_tumbling", "udf_pandas",
-        "dedup_prefix", "text_ngrams", "text_lang_stats", "text_quality",
-        "text_langid", "text_tfidf", "sim_knn_brute", "multimodal_enrich",
-        "pipeline_pretrain_prep", "emb_label_centroids", "mm_image_meta",
-        "mm_audio_frames", "mm_binary_sink_roundtrip", "dedup_near_jaccard",
-        "dedup_near_simhash", "dedup_near_embedding", "stream_sliding",
-        "stream_session", "stream_stateful_counter", "stream_cdc_latest",
-        "stream_interval_join", "scan_python_datasource",
-        "stream_python_datasource", "sink_python_datasource_roundtrip",
-        "sink_zorder_skip", "udf_scalar", "udaf_grouped_pandas",
-        "udtf_split", "fn_string", "fn_date", "fn_math", "fn_json",
-        "fn_variant", "udf_arrow_map", "decontaminate_ngram",
-        "text_unigram_logprob", "udf_cogrouped_pandas", "agg_percentile",
-        "agg_rollup", "agg_cube", "sim_ann_lsh", "dedup_near_embedding_ann",
-        "dedup_clusters",
-    }
-)
-
-# The 45 ops the driver hash- or rows-verified green in round 3
-# (CORRECTNESS_r03 keys minus the 5 hash failures, which lead the r4
-# window after their type-class fixes) — parked at the tail.
-_R03_VERIFIED = frozenset(
-    {
-        "fn_array",
-        "fn_cond",
-        "fn_map",
-        "agg_stats",
-        "agg_collect",
-        "agg_grouping_sets",
-        "win_range_frame",
-        "win_ntile_pct",
-        "win_first_last",
-        "agg_approx_distinct",
-        "stream_dedup_watermark",
-        "stream_late_data",
-        "q3_top_orders",
-        "distinct_users",
-        "q2_min_cost_supplier",
-        "q4_priority_check",
-        "q6_forecast_revenue",
-        "q7_volume_shipping",
-        "q8_market_share",
-        "q9_product_profit",
-        "q10_returned_items",
-        "q11_important_stock",
-        "q13_customer_distribution",
-        "q14_promo_revenue",
-        "q15_top_supplier",
-        "q16_supplier_cnt",
-        "q17_small_qty_revenue",
-        "q18_large_orders",
-        "q19_disjunctive_revenue",
-        "q20_excess_suppliers",
-        "q21_waiting_suppliers",
-        "q22_dormant_customers",
-        "text_clean_html",
-        "pii_text_scrub",
-        "sample_hash_split",
-        "dedup_cross_corpus",
-        "pack_shards",
-        "shuffle_deterministic",
-        "chunk_documents",
-        "sample_domain_mix",
-        "ts_gapfill",
-        "ts_ohlc",
-        "ts_locf",
-        "ts_rollup_multi",
-        "ts_interpolate",
-    }
-)
-
-
-# The 50 ops the driver sampled green in round 4 (CORRECTNESS_r04 keys —
-# 47 hash-pass + 3 rows-only by design) — parked at the tail.
-_R04_VERIFIED = frozenset(
-    {
-        "ab_welch_ttest", "agg_hll_merge", "agg_pivot",
-        "basket_pair_counts", "cdc_compact_latest", "conversion_lag_stats",
-        "dedup_apply", "dedup_keep_best", "dedup_span_corpus",
-        "dedup_survivorship", "dist_cumulative_share", "dq_expectations",
-        "emb_norm_stats", "emb_quantize", "feature_quantile_bucketize",
-        "fn_cast", "fn_lambda", "funnel_conversion",
-        "geo_cell_join_radius", "geo_haversine_radius", "graph_bfs_hops",
-        "graph_pagerank", "merge_upsert", "pipeline_rag_topk",
-        "q12_late_priority", "quality_train_score", "retention_cohorts",
-        "rfm_segments", "sample_seeded", "sample_stratified",
-        "scan_dpp", "scan_schema_evolution", "scd2_history",
-        "sink_partition_prune", "sql_lateral_topn", "sql_pipe_syntax",
-        "sql_recursive_cte", "sql_udf_registered", "text_boilerplate_prefix",
-        "text_bpe_tokens", "text_fingerprint", "text_quality_score",
-        "text_repetition", "text_token_entropy", "ts_decline_streak_alert",
-        "ts_inflight_orders", "ts_rollup_multi", "ts_sessionize",
-        "unpivot_melt", "win_activity_streaks",
-    }
-)
-
-
-# The 50 ops the driver sampled green in round 5 (CORRECTNESS_r05 keys —
-# 49 hash-pass + 1 rows-only by design) — parked at the tail.
-_R05_VERIFIED = frozenset(
-    {
-        "agg_approx_percentile", "agg_approx_topk", "agg_bitmap_distinct",
-        "agg_higher_moments", "agg_histogram", "agg_listagg",
-        "agg_mad_outliers", "agg_mode", "agg_observe_metrics",
-        "agg_weighted_avg", "fn_bitpack_key", "fn_bitwise",
-        "fn_collation", "fn_explode", "fn_fuzzy",
-        "fn_interval", "fn_regex", "fn_struct",
-        "fn_surrogate_key", "fn_try_safe", "fn_url",
-        "fn_xml", "join_asof_forward", "join_asof_nearest",
-        "join_asof_tolerance", "join_bloom_runtime_filter", "join_fuzzy_blocked",
-        "join_null_safe_keys", "join_range_binned", "join_skew_aqe",
-        "pii_encrypt_roundtrip", "pii_noisy_count_laplace", "profile_key_skew",
-        "profile_table", "scan_binary_files", "scan_file_metadata",
-        "scan_recursive_dir", "sink_compact_small_files", "sink_csv_quoted_multiline",
-        "sink_dynamic_partition_overwrite", "sink_jsonl_sharded", "sink_sorted_skip",
-        "ts_ewma", "ts_rollup_multi", "ts_seasonality_dow",
-        "ts_zscore_outliers", "win_pct_change", "win_rank_salted",
-        "win_running_distinct", "win_time_range",
-    }
-)
-
-
-# The 50 ops the driver sampled green in round 6 (CORRECTNESS_r06 keys —
-# 46 hash-pass + 4 rows-only by design) — parked at the tail.
-_R06_VERIFIED = frozenset(
-    {
-        "agg_adstock_decay_correlation", "agg_duplicate_stats",
-        "agg_eoq_order_quantity", "agg_inventory_turns_gmroi",
-        "attribution_last_touch", "attribution_markov_removal",
-        "dedup_url_canonical", "emb_matryoshka_truncation_quality",
-        "emb_pca_project", "fn_business_days", "fn_calendar_dim",
-        "fn_decimal_money_exactness", "fn_ip_subnet",
-        "graph_connected_components", "join_array_membership",
-        "mm_exif_strip", "mm_image_features", "mm_image_resize",
-        "mm_phash_dedup", "mm_video_keyframes", "pipeline_rag_context_pack",
-        "profile_column_entropy", "reconcile_table_diff",
-        "sample_temperature_mixture", "scan_csv_permissive", "sim_ann_ivf",
-        "sim_hybrid_weighted_fusion", "sim_knn_join_topk", "sim_rrf_fusion",
-        "stream_pretrain_prep", "stream_python_datasource_sink",
-        "stream_sink_exactly_once", "stream_static_join", "text_bm25_topk",
-        "text_code_detect_heuristic", "text_watermark_greenlist_score",
-        "topk_per_group", "ts_ar1_forecast_backtest", "ts_cusum_drift",
-        "ts_hampel_despike", "ts_holt_linear_smoothing",
-        "ts_holt_winters_additive", "ts_interval_merge", "ts_macd_indicator",
-        "ts_markov_steady_state", "ts_sharpe_sortino_daily",
-        "ts_token_bucket_throttle", "udf_pandas_iter", "udf_pandas_struct",
-        "win_rolling_median",
-    }
-)
-
-
-# The 50 ops the driver sampled green in round 7 (CORRECTNESS_r07 keys —
-# 49 hash-pass + 1 rows-only by design, sim_mmr_rerank) — parked at the
-# tail.
-_R07_VERIFIED = frozenset(
-    {
-        "decontaminate_substring", "pipeline_sft_pair_prep",
-        "pipeline_dpo_pair_prep", "pipeline_training_set_features",
-        "pipeline_next_token_examples", "pipeline_corpus_health_report",
-        "graph_k_core_peel", "graph_triangle_count", "graph_degree_stats",
-        "graph_common_neighbors", "graph_adamic_adar", "graph_reciprocity",
-        "graph_assortativity_degree", "graph_clustering_coefficient",
-        "graph_jaccard_neighbors", "eval_confusion_matrix",
-        "eval_decile_lift", "eval_roc_auc", "eval_calibration_bins",
-        "eval_ndcg_at_k", "eval_mrr_recall_at_k", "eval_brier_score",
-        "eval_pr_auc", "eval_cohen_kappa", "eval_profit_curve",
-        "eval_regression_metrics", "eval_fairness_parity", "eval_log_loss",
-        "eval_expected_calibration_error", "eval_topk_overlap",
-        "eval_f1_threshold_sweep", "eval_mcc_sweep", "eval_langid_confusion",
-        "eval_qini_uplift_curve", "eval_offpolicy_ips",
-        "eval_rec_catalog_coverage", "sample_balanced_class",
-        "text_dedup_exact_normalized", "emb_dim_stats",
-        "stream_foreachbatch_upsert", "win_year_over_year", "text_oov_rate",
-        "agg_gini_coefficient", "pii_retention_sweep", "dq_freshness_sla",
-        "win_ytd_cumulative", "join_point_in_time",
-        "agg_partial_merge_rollup", "sim_mmr_rerank",
-        "agg_benford_distribution",
-    }
-)
-
-
-# The 50 ops the driver sampled green in round 8 (CORRECTNESS_r08 keys —
-# a PERFECT 50/50 hash-pass window, including the three deliberate
-# re-samples stream_dedup_watermark / stream_late_data / sample_seeded
-# now hash-banked) — parked at the tail.
-_R08_VERIFIED = frozenset(
-    {
-        "stream_dedup_watermark", "stream_late_data", "sample_seeded",
-        "agg_sequence_detect", "join_fanout_safe", "agg_weighted_percentile",
-        "agg_new_vs_returning", "agg_transition_matrix",
-        "sample_negative_pairs", "agg_histogram_2d", "sql_named_parameters",
-        "win_share_of_total", "fn_rendezvous_hash_routing",
-        "agg_top_movers_wow", "text_keywords_topk",
-        "ts_seasonal_naive_backtest", "stream_checkpoint_resume",
-        "ts_rolling_active_users", "profile_value_patterns", "ts_local_peaks",
-        "agg_cramers_v", "agg_audience_overlap", "text_zipf_fit",
-        "win_drawdown", "pii_vault_tokenize", "agg_cohort_ltv",
-        "ts_window_custom_origin", "set_union_by_name_evolution",
-        "join_ip_range_lookup", "agg_user_path_topk",
-        "sample_systematic_every_nth", "emb_outlier_scores",
-        "agg_hhi_concentration", "ts_change_point_simple", "agg_leadtime_sla",
-        "dq_referential_integrity", "agg_abc_classification",
-        "agg_change_contribution", "scan_versioned_time_travel",
-        "text_source_overlap", "agg_survival_km", "ts_control_chart_xmr",
-        "text_collocations_pmi", "ts_activity_heatmap_dow_hour",
-        "agg_bootstrap_ci", "sample_time_split", "ts_seasonality_strength",
-        "agg_topk_share", "agg_histogram_equidepth", "dq_missingness_patterns",
-    }
-)
-
-
-# The 50 ops the driver sampled green in round 9 (CORRECTNESS_r09 keys —
-# a PERFECT 50/50 hash-pass window, the six r8 force-includes leading) —
-# parked at the tail.  NOTE: the dedup_containment_pairs row in that bank
-# is vacuous (spark_rows: 0, empty == empty); the op was re-parameterized
-# in r10 and heads _PLANNED_WINDOWS[11] for a non-vacuous re-bank.
-_R09_VERIFIED = frozenset(
-    {
-        "dedup_near_simhash", "sim_mmr_rerank", "mm_phash_dedup",
-        "scan_avro", "sink_avro_roundtrip", "scan_avro_schema_evolution",
-        "agg_trimmed_mean", "agg_behavior_entropy",
-        "ts_latency_percentiles_hourly", "agg_generalized_means",
-        "agg_allocation_by_share", "text_readability_proxy",
-        "basket_lift_rules", "stream_multi_source_union",
-        "agg_net_revenue_retention", "agg_user_active_days_hist",
-        "ts_rsi_indicator", "dedup_containment_pairs",
-        "agg_repeat_purchase_rate", "ts_autocorrelation",
-        "dq_json_schema_check", "pii_phone_normalize",
-        "dq_duplicate_payments", "feature_minmax_scale",
-        "agg_price_volume_mix", "dq_flatline_detection",
-        "scan_highwatermark_incremental", "dq_sequence_gaps",
-        "ts_percentile_bands", "pii_consent_filter",
-        "win_cross_sectional_zscore", "agg_rank_stability_spearman",
-        "ab_effect_size_cohens_d", "ab_sample_size_estimate",
-        "geo_bearing_distance", "agg_rate_wilson_ci",
-        "ts_pacing_vs_target", "text_tokenizer_fertility",
-        "join_record_linkage_scored", "scan_multiformat_union",
-        "ts_runs_test", "ts_classical_decompose", "agg_ks_two_sample",
-        "agg_psi_drift", "agg_mutual_information", "fn_feature_hashing",
-        "agg_label_balance_report", "emb_mixup_pairs",
-        "agg_segment_migration", "emb_nearest_centroid_assign",
-    }
-)
-
-
-# The 50 ops the driver sampled green in round 10 (CORRECTNESS_r10 keys —
-# a PERFECT 50/50 hash-pass window, led by the agg_survival_km deliberate
-# re-bank, now non-vacuous with spark_rows: 2) — parked at the tail.
-_R10_VERIFIED = frozenset(
-    {
-        "agg_survival_km", "emb_pairwise_cosine_hist",
-        "dedup_cluster_size_dist", "dedup_blocking_quality",
-        "dedup_minhash_estimate", "mm_image_channel_stats",
-        "text_bpe_merge_round", "quality_gopher_rules",
-        "emb_kmeans_pp_init", "sample_hard_negatives",
-        "text_ngram_novelty_rate", "ts_trend_ols", "agg_skyline_pareto",
-        "dq_cross_field_rules", "dq_rowcount_anomaly_daily",
-        "ab_two_proportion_ztest", "agg_corr_matrix",
-        "sample_importance_weighted", "agg_token_budget_allocation",
-        "dq_sft_format_check", "win_rolling_regression_slope",
-        "agg_window_funnel_strict", "ts_burstiness_fano",
-        "attribution_position_based", "pii_email_normalize",
-        "ts_residual_anomaly", "agg_bounce_rate", "fn_luhn_check",
-        "pii_kanon_generalize", "join_mark_exists",
-        "text_char_ngram_profile", "agg_funnel_stage_latency",
-        "text_sentence_stats", "agg_abc_xyz_class", "dq_primary_key_check",
-        "ts_record_highs", "agg_retention_curve_dayn",
-        "agg_winsorized_stats", "fn_human_number_parse",
-        "dq_drift_report_multi", "feature_standard_scale",
-        "ab_segment_heterogeneity", "ab_difference_in_differences",
-        "agg_price_elasticity", "scan_jsonl_corrupt_capture",
-        "text_template_mining", "sample_epoch_repeat_factors",
-        "emb_product_quantize_lite", "agg_newsvendor_quantile",
-        "ts_interarrival_stats",
-    }
-)
-
-
-_DRIVER_VERIFIED = (
-    _R01_VERIFIED | _R02_VERIFIED | _R03_VERIFIED | _R04_VERIFIED
-    | _R05_VERIFIED | _R06_VERIFIED | _R07_VERIFIED | _R08_VERIFIED
-    | _R09_VERIFIED | _R10_VERIFIED
-)
-
-
-def _ordered_names() -> list[str]:
-    window = [n for n in _PRIORITY_WINDOW if n in REGISTRY]
-    placed = set(window)
-    planned = [
-        n
-        for rnd in sorted(_PLANNED_WINDOWS)
-        for n in _PLANNED_WINDOWS[rnd]
-        if n in REGISTRY and n not in placed
-    ]
-    placed.update(planned)
-    rest = [n for n in REGISTRY if n not in placed]
-    mid = [n for n in rest if n not in _DRIVER_VERIFIED]
-    tail = [n for n in rest if n in _DRIVER_VERIFIED]
-    return window + planned + mid + tail
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
+    """Every registered op's builder, in registration order."""
+    return {name: op.fn for name, op in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
-    }
+    """Oracle SQL of every hash-checked op, in registration order."""
+    return {name: op.oracle for name, op in REGISTRY.items() if op.oracle is not None}

@@ -44,13 +44,16 @@ RUNTIME_CONFS = {
 # default, so a payload-amplifying UDF (300-byte text row -> ~100 KB
 # raster) can turn one bounded input batch into a multi-hundred-MB output
 # buffer and exhaust JVM direct memory across 32 concurrent tasks (found
-# by scripts/mm_scale_probe.py at 10x raster volume).  The binary-emitting
+# at 10x raster volume, SCALE.md "Raster decode tier").  The binary-emitting
 # UDFs self-bound via ops/multimodal._bounded_slices.  Spark 4.1's
 # spark.sql.execution.arrow.maxBytesPerOutputBatch conf was tried as a
 # global guard and REVERTED: enabling it trips an
 # ArrayIndexOutOfBoundsException in MapInBatchEvaluator's writeSizedBatch
 # on chained mapInPandas plans (ArrowColumnVector.getChild(0) on an empty
 # struct) — bound amplifying outputs in the UDF, not via that conf.
+
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -87,6 +90,13 @@ def get_spark(app_name: str = "carpet_spark", cpus: int | None = None) -> SparkS
         # same knob prevents spurious task failures.
         .config("spark.python.authenticate.socketTimeout", "120s")
         .config("spark.ui.enabled", "false")
+        # machine-readable output (bench JSON, sweeps) carries no
+        # "[Stage N: …]" progress bars
+        .config("spark.ui.showConsoleProgress", "false")
+        # Python workers import carpet_spark (UDFs, Python data sources)
+        # whatever the driver's working directory; Spark merges this with
+        # any PYTHONPATH the workers already get
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config(

@@ -8,8 +8,6 @@ per-round habit by sweeping only:
 
 - ops whose fingerprint (own source + oracle + shared-infra salt, see
   scripts/op_fingerprints.py) differs from the last recorded sweep,
-- plus the current driver window (_PRIORITY_WINDOW) ops — always, so
-  the externally-banked set is never stale at sf0.1,
 - plus anything never swept before (or everything, when the shared
   infra salt changed).
 
@@ -43,7 +41,7 @@ def main() -> None:
     dry = "--dry-run" in args
     full = "--full" in args
 
-    from carpet_spark.registry import REGISTRY, _PRIORITY_WINDOW
+    from carpet_spark.registry import REGISTRY
 
     fps = current_fingerprints()
     salt = fps.pop("_salt")
@@ -60,25 +58,18 @@ def main() -> None:
             old = {}
 
     hash_ops = [n for n, op in REGISTRY.items() if op.oracle is not None]
-    changed = [n for n in hash_ops if old.get(n) != fps[n]]
-    window = [
-        n for n in _PRIORITY_WINDOW
-        if REGISTRY[n].oracle is not None and n not in changed
-    ]
-    to_sweep = changed + window
+    to_sweep = [n for n in hash_ops if old.get(n) != fps[n]]
     sweep_set_hash = hashlib.sha256(
         "\n".join(sorted(to_sweep)).encode()
     ).hexdigest()[:16]
 
     print(
-        f"delta sweep @ {SF_DIR}: {len(changed)} changed + "
-        f"{len(window)} window force-includes = {len(to_sweep)} ops "
+        f"delta sweep @ {SF_DIR}: {len(to_sweep)} changed ops "
         f"(of {len(hash_ops)} hash ops; swept-set sha256 {sweep_set_hash})"
     )
     if dry:
         for n in to_sweep:
-            tag = "changed" if n in changed else "window"
-            print(f"  {tag:8s} {n}")
+            print(f"  {n}")
         return
     if not to_sweep:
         print("nothing to sweep — record is current")

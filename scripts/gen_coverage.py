@@ -247,16 +247,14 @@ def main() -> None:
         "passes the oracle compare as empty == empty — a vacuous bank that\n"
         "proves nothing about the op's math.  This bug class shipped twice\n"
         "(agg_survival_km's 7-day censoring in r8, dedup_containment_pairs'\n"
-        "%9 bounding slice in r9) and was closed structurally in r10:\n"
-        "scripts/driver_window_probe.py now FAILS if any window op returns 0\n"
-        "rows at sf0.01 unless it sits in its EMPTY_IS_THE_ANSWER allowlist\n"
-        "with a written justification (currently empty — 'the threshold is\n"
+        "%9 bounding slice in r9) and was closed in r10.  'The threshold is\n"
         "never hit at this SF' is the bug, not a justification; the fix is\n"
         "re-parameterization that preserves the op's semantics, as\n"
         "dedup_containment_pairs %9→%3 and emb_pairwise_cosine_hist stride\n"
-        "997→199 demonstrate).  tests/test_positive_path.py pins every\n"
+        "997→199 demonstrate.  tests/test_positive_path.py pins every\n"
         "de-vacuated op non-vacuous AND hash-matching at sf0.01 so the fixes\n"
-        "cannot silently regress."
+        "cannot silently regress.  (The r10 zero-row check on the driver's\n"
+        "50-op sample window went with the window; last present at `e7aebc4`.)"
     )
     with open(os.path.join(os.path.dirname(__file__), "..", "COVERAGE.md"), "w") as f:
         f.write("\n".join(lines) + "\n")

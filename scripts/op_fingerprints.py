@@ -5,8 +5,8 @@ The r10 full-registry sf0.1 parity sweep found all seven of that round's
 display bugs, but costs ~2.5 h wall (dominated by six quadratic
 exact-audit DuckDB oracles), so it only ran when someone remembered.
 The r10 verdict (item 4) asks for a DELTA mode: sweep only ops whose
-source or oracle changed since the last recorded sweep, plus the
-current driver window.  This module defines what "changed" means.
+source or oracle changed since the last recorded sweep.  This module
+defines what "changed" means.
 
 An op's fingerprint is sha256 over:
 

@@ -76,11 +76,11 @@ def test_headline_plan_fingerprint_pinned(spark, sf_dir, name):
 # pins the headline queries, but a plan regression in the heaviest
 # non-bench ops (iterative graph kernels, Python data sources, streaming
 # joins, pandas cogroups) would otherwise surface only as a slow driver
-# round.  Ranked by measured Spark-side wall time over the full-registry
-# probe at sf0.01 (scripts/driver_window_probe.py 690, r7: 459 s total);
-# fingerprints are the order-insensitive v2 form, pinned from PLANS.json
-# at the same commit.  Re-pin HERE and regenerate PLANS.json in the same
-# commit when a plan change is intentional.
+# round.  Ranked by measured Spark-side wall time over a full-registry
+# run at sf0.01 (r7: 459 s total); fingerprints are the order-insensitive
+# v2 form, pinned from PLANS.json at the same commit.  Re-pin HERE and
+# regenerate PLANS.json in the same commit when a plan change is
+# intentional.
 # ---------------------------------------------------------------------------
 
 from bench import _plan_fingerprint_v2  # noqa: E402
@@ -108,8 +108,10 @@ EXPENSIVE_PINNED = [
     ("quality_train_score", "2a9f52604af3"),          # 4.12s
     # re-pinned r11 optimization: both cogroup sides pre-partitioned by
     # key at defaultParallelism (ClusteredDistribution satisfied, the ~15k
-    # per-key Python calls fan out over every core)
-    ("udf_cogrouped_pandas", "bac36b486c79"),         # 3.97s
+    # per-key Python calls fan out over every core); re-pinned once more
+    # when v2 began normalizing a defaultParallelism repartition count,
+    # so the pin holds at any core count
+    ("udf_cogrouped_pandas", "323acd69f17e"),         # 3.97s
     ("dq_primary_key_check", "d3e3fbab875d"),         # 3.79s
     # re-pinned r9: intentional hi/lo-split escalation of the op's
     # inline fixed-point sums (sweep commit 36a6b65)
@@ -122,8 +124,9 @@ EXPENSIVE_PINNED = [
     ("stream_interval_join", "ff48a261270e"),         # 3.63s
     ("graph_bfs_hops", "f11fa21b5f6d"),               # 3.54s
     # re-pinned r11 optimization: spread + per-vector norm hoist on the
-    # all-pairs probe scoring
-    ("eval_rec_catalog_coverage", "6fe38eb30f96"),    # 3.15s
+    # all-pairs probe scoring; re-pinned with the defaultParallelism
+    # repartition-count normalization (see udf_cogrouped_pandas)
+    ("eval_rec_catalog_coverage", "f1354589133d"),    # 3.15s
     ("stream_multi_source_union", "617b4e992d85"),    # 3.13s
     # re-pinned r11: iterative-lineage truncation (1-row argmax
     # localCheckpoints — 94 Exchanges / 27 distance passes -> linear)
@@ -144,4 +147,16 @@ def test_expensive_plan_fingerprint_pinned(spark, sf_dir, name, pinned):
         f"{pinned}). If intentional, re-pin here AND regenerate PLANS.json "
         "in the same commit; if not, diff .explain('formatted') vs the "
         "last good commit."
+    )
+
+
+@pytest.mark.parametrize("cols", [(), ("id",)], ids=["round_robin", "hash"])
+def test_repartition_count_moves_v2_unless_default_parallelism(spark, cols):
+    """v2 replaces a repartition count only when it equals the session's
+    defaultParallelism (an environment knob); any other count is plan
+    shape and must still move the fingerprint."""
+    n = spark.sparkContext.defaultParallelism
+    df = spark.range(1000)
+    assert _plan_fingerprint_v2(df.repartition(n + 1, *cols)) != _plan_fingerprint_v2(
+        df.repartition(n, *cols)
     )

@@ -4,6 +4,9 @@ expectations, plus golden redaction examples for the PII ops.
 """
 
 import hashlib
+import os
+import subprocess
+import sys
 
 import pyspark.sql.functions as F
 import pytest
@@ -206,3 +209,27 @@ def test_compaction_collapses_file_count(spark, sf_dir):
     out = glob.glob(os.path.join(_sink_path(spark, "compact_out"), "part-*"))
     assert len(debris) == 64
     assert len(out) == 1
+
+
+def test_scan_avro_from_any_working_directory(tmp_path):
+    """Python workers import carpet_spark even when the driver runs outside
+    the repo with no PYTHONPATH: get_spark points the workers' path at the
+    package."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from carpet_spark.registry import REGISTRY\n"
+        "from carpet_spark.session import get_spark\n"
+        "spark = get_spark('cwd_check', cpus=1)\n"
+        f"print(len(REGISTRY['scan_avro'].fn(spark, {SF_SMOKE!r}).toPandas()))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    r = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert int(r.stdout.split()[-1]) > 0
