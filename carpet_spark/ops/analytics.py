@@ -32,9 +32,10 @@ def _funnel_user_times(ev: DataFrame, deadline_days: int | None = None) -> DataF
     The previous formulation was the literal relational recursion — each
     stage a filtered scan of events re-joined to the previous stage and
     re-aggregated — which re-read events once per stage and planned 13-30
-    Exchanges per op (plans/audit r11: funnel_conversion 17,
-    agg_funnel_stage_latency 24, agg_window_funnel_strict 30).  But every
-    stage only needs the ONE user's events, so the whole recursion
+    Exchanges per op (counts from the r11 plans/audit dump, since removed
+    from the repo: funnel_conversion 17, agg_funnel_stage_latency 24,
+    agg_window_funnel_strict 30).  But every stage only needs the ONE
+    user's events, so the whole recursion
     collapses to a single groupBy(user_id): collect the user's non-signup
     funnel events, then evaluate each stage as an in-memory array
     reduction — t_k = array_min(ts of events with type k, ts >= t_{k-1}

@@ -68,9 +68,10 @@ def _sink_path(spark: SparkSession, name: str) -> str:
 
 @register("sink_parquet_roundtrip", oracle=_SINK_SLICE_ORACLE)
 def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write a transformed slice partitioned by l_returnflag (snappy), read
-    it back.  Partitioned layout is the 100 TB story: downstream queries
-    with a returnflag predicate prune whole directories.  The roundtrip is
+    """Write a transformed slice partitioned by l_returnflag (the
+    session's default codec, zstd level 1), read it back.  Partitioned
+    layout is the 100 TB story: downstream queries with a returnflag
+    predicate prune whole directories.  The roundtrip is
     an identity, so the oracle is the source filter itself — a lost or
     mangled row anywhere in write→read fails the hash."""
     df = (
@@ -1471,8 +1472,11 @@ def sink_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_parquet_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet sink with zstd compression, read back and aggregated —
     the codec the 100 TB tier actually stores on (zstd ~ snappy's
-    speed at gzip-class ratios; snappy is only the legacy default),
+    speed at gzip-class ratios; snappy is only Spark's legacy default),
     proving the zstd-jni native path works end-to-end in this build.
+    ``get_spark`` sessions also write zstd by default; this op keeps
+    its explicit ``.option("compression", "zstd")`` so it still writes
+    zstd under a session built elsewhere with another codec.
     The oracle aggregates the SOURCE slice, so any corruption across
     encode→decode fails the hash.
 

@@ -97,6 +97,18 @@ def get_spark(app_name: str = "carpet_spark", cpus: int | None = None) -> SparkS
         # whatever the driver's working directory; Spark merges this with
         # any PYTHONPATH the workers already get
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # Parquet output is zstd level 1, not Spark's legacy snappy: the
+        # redaction path writes 0.61 bytes per byte read instead of 1.06
+        # (64-char hex hashes replace short names).  On a 400k-row PII
+        # file (4 vCPU, median of 16 writes): snappy 33.37 MB in 1.032 s,
+        # zstd level 3 (Spark's zstd default) 19.45 MB in 1.090 s, zstd
+        # level 1 19.01 MB in 1.008 s.  Builder-only, not RUNTIME_CONFS:
+        # ensure_runtime_confs leaves the codec of a session built
+        # elsewhere alone.  The builder beats a spark-submit --conf, so
+        # pick another codec per write (.option("compression", ...)) or
+        # with spark.conf.set on the returned session.
+        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.hadoop.parquet.compression.codec.zstd.level", "1")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config(

@@ -15,6 +15,9 @@ flags the optimization guide's smells:
 
 Output: plans/audit/<op>.txt (full plan text) + one summary TSV on stdout
 ordered by (exchanges, python nodes) so the worst shapes sort first.
+The dump is regenerated on demand and not kept in the repo (plans/audit/
+is git-ignored): a committed copy drifts from the current plans and no
+test reads it.
 
 Usage: python scripts/plan_audit.py [--sf DIR] [--ops a,b,c]
 """

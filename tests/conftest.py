@@ -35,7 +35,8 @@ _DURATIONS_FILE = os.path.join(
 #   CARPET_FULL=1 python -m pytest tests/ -q     (single process, ~50+ min)
 # Runs that target specific files/tests (fewer than 15 modules collected)
 # are never filtered, so `pytest tests/test_degenerate.py` still runs all
-# of it.  pytest prints the deselection count in its summary line.
+# of it.  A filtered run prints a one-line banner after collection with
+# the selected and deselected counts and how to run the full gate.
 # ---------------------------------------------------------------------------
 
 # headline bench ops (bench.py HEADLINE values) — always in the fast set
@@ -61,6 +62,9 @@ _FAST_SAMPLED_MODULES = ("test_oracle_parity.py", "test_output_schemas.py")
 _FAST_DROPPED_MODULES = (
     "test_degenerate.py", "test_type_lint.py", "test_sf01_regressions.py",
 )
+
+# (selected, deselected) counts of the fast filter, for the banner
+_FAST_COUNTS = pytest.StashKey[tuple]()
 
 
 def _driver_fast_filter(config, items):
@@ -94,6 +98,20 @@ def _driver_fast_filter(config, items):
             keep.append(it)
     items[:] = keep
     config.hook.pytest_deselected(items=dropped)
+    config.stash[_FAST_COUNTS] = (len(keep), len(dropped))
+
+
+def pytest_collection_finish(session):
+    """One banner line whenever the fast-subset filter ran, so a bare
+    `pytest tests/` never passes for the full gate."""
+    counts = session.config.stash.get(_FAST_COUNTS, None)
+    reporter = session.config.pluginmanager.get_plugin("terminalreporter")
+    if counts is None or reporter is None:
+        return
+    reporter.write_line(
+        f"fast subset: {counts[0]} selected, {counts[1]} deselected; "
+        "full gate: CARPET_FULL=1 or python scripts/run_tests_sharded.py [N]"
+    )
 
 
 def pytest_collection_modifyitems(config, items):

@@ -167,6 +167,115 @@ def test_cli_end_to_end(spark, tmp_path):
     src_row = src.filter(F.col("c_custkey") == 1).collect()[0]
     assert row.c_name == hashlib.sha256(f"s{src_row.c_name}".encode()).hexdigest()
     assert not any(ch in "AEIOU" for ch in row.c_mktsegment)
+    # the session's output codec: every column chunk of every file is zstd
+    assert _parquet_codecs(out) == {"ZSTD"}
+
+
+def _parquet_codecs(out_dir):
+    """Codec names of every column chunk of every Parquet file under
+    out_dir, read from the file footers."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(out_dir, "**", "*.parquet"), recursive=True)
+    assert files, out_dir
+    codecs = set()
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        for i in range(meta.num_row_groups):
+            rg = meta.row_group(i)
+            codecs |= {rg.column(j).compression for j in range(rg.num_columns)}
+    return codecs
+
+
+def test_apply_pii_write_is_zstd_with_snappy_values(spark, tmp_path):
+    """The library path: apply_pii on a get_spark session, then a plain
+    df.write.parquet, writes zstd; .option("compression", ...) still
+    overrides it, and both files hold the same values."""
+    from carpet_spark.cli import PIIConfig, apply_pii
+
+    cfg = PIIConfig(drop=["c_acctbal"], hash=["c_name"], hash_salt="s")
+    out = apply_pii(load(spark, SF_SMOKE, "customer"), cfg)
+    zstd_dir, snappy_dir = str(tmp_path / "zstd"), str(tmp_path / "snappy")
+    out.write.parquet(zstd_dir)
+    out.write.option("compression", "snappy").parquet(snappy_dir)
+    assert _parquet_codecs(zstd_dir) == {"ZSTD"}
+    assert _parquet_codecs(snappy_dir) == {"SNAPPY"}
+    zstd_rows = spark.read.parquet(zstd_dir).orderBy("c_custkey").collect()
+    snappy_rows = spark.read.parquet(snappy_dir).orderBy("c_custkey").collect()
+    assert len(zstd_rows) == 150
+    assert zstd_rows == snappy_rows
+
+
+def test_ensure_runtime_confs_keeps_session_codec(spark):
+    """The zstd default is a get_spark builder conf, not a runtime conf: a
+    session that chose another codec keeps it through ensure_runtime_confs."""
+    from carpet_spark.session import ensure_runtime_confs
+
+    key = "spark.sql.parquet.compression.codec"
+    assert spark.conf.get(key) == "zstd"
+    spark.conf.set(key, "gzip")
+    try:
+        assert ensure_runtime_confs(spark).conf.get(key) == "gzip"
+    finally:
+        spark.conf.set(key, "zstd")
+
+
+def test_apply_pii_overlap_rules(spark):
+    """apply_pii on a column named in several lists: nullify beats hash,
+    mask applies to the hex digest of hash, drop beats every list, and
+    bucket skips a nullified column."""
+    from carpet_spark.cli import PIIConfig, apply_pii
+
+    df = spark.createDataFrame(
+        [(1, "ann", "a1", 1234.0, 2500.0, "x")],
+        "id int, n_h string, h_m string, n_b double, b double, gone string",
+    )
+    cfg = PIIConfig(
+        drop=["gone"],
+        nullify=["n_h", "n_b", "gone"],
+        hash=["n_h", "h_m", "gone"],
+        hash_salt="s",
+        mask=["h_m", "gone"],
+        mask_pattern="[0-9]",
+        mask_replacement="#",
+        bucket=["n_b", "b", "gone"],
+        bucket_width=1000.0,
+    )
+    out = apply_pii(df, cfg)
+    assert out.columns == ["id", "n_h", "h_m", "n_b", "b"]
+    row = out.collect()[0]
+    assert row.n_h is None
+    digest = hashlib.sha256(b"sa1").hexdigest()
+    assert row.h_m == "".join("#" if ch.isdigit() else ch for ch in digest)
+    assert row.n_b is None
+    assert out.schema["n_b"].dataType.simpleString() == "double"
+    assert row.b == 2
+
+
+def test_cli_partition_by_layout(spark, tmp_path):
+    """--partition-by writes one COL=value directory per distinct value,
+    with the partition column in the path and not in the files."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from carpet_spark import cli
+
+    out = str(tmp_path / "by_segment")
+    cli.main(
+        [f"{SF_SMOKE}/customer.parquet", out, "--partition-by", "c_mktsegment"]
+    )
+    src = load(spark, SF_SMOKE, "customer")
+    segments = {r.c_mktsegment for r in src.select("c_mktsegment").distinct().collect()}
+    dirs = {d for d in os.listdir(out) if not d.startswith(("_", "."))}
+    assert dirs == {f"c_mktsegment={s}" for s in segments}
+    for f in glob.glob(os.path.join(out, "*", "*.parquet")):
+        assert "c_mktsegment" not in pq.read_schema(f).names
+    back = spark.read.parquet(out)
+    assert back.count() == src.count()
+    assert _parquet_codecs(out) == {"ZSTD"}
 
 
 def test_cli_query_subcommand(spark, tmp_path, capsys):
