@@ -64,8 +64,8 @@ def _execute(df) -> int:
 def _normalized_plan(df) -> str:
     """Executed-plan text with the run-varying bits (expression ids, plan
     ids, temp/file paths, row-count statistics) normalized away, so it
-    only changes when the plan SHAPE changes.  Both fingerprints hash
-    this text; v2 adds its own rules on top.
+    only changes when the plan SHAPE changes.  _plan_fingerprint_v2
+    adds its own rules on top.
 
     Scan-metadata strings (DataFilters etc.) truncate at
     spark.sql.maxMetadataStringLength BEFORE our expr-id normalization, so
@@ -91,12 +91,6 @@ def _normalized_plan(df) -> str:
     return re.sub(r"(\w+?)_\d+#", r"\1#", s)
 
 
-def _plan_fingerprint(df) -> str:
-    """Stable hash of the normalized physical plan (legacy form, kept so
-    results compare with BENCH_r02's baseline fingerprints)."""
-    return hashlib.sha256(_normalized_plan(df).encode()).hexdigest()[:12]
-
-
 def _sort_bracket_segments(s: str) -> str:
     """Canonicalize attribute ORDER inside every bracketed list.
 
@@ -104,8 +98,8 @@ def _sort_bracket_segments(s: str) -> str:
     AttributeSet/ExpressionSet) emits grouping/Expand/partitioning
     attribute lists in exprId-hash order, which varies with how many
     expressions the JVM session allocated earlier — the plan SHAPE is
-    identical but `key=[a#, b#]` vs `key=[b#, a#]` flips the legacy
-    fingerprint (observed: profile_table's 4-column distinct rewrite).
+    identical but `key=[a#, b#]` vs `key=[b#, a#]` flips a hash of the
+    normalized plan (observed: profile_table's 4-column distinct rewrite).
     Sorting the top-level comma segments of every [..] / (..) region
     makes the fingerprint order-insensitive while still moving on any
     real change (extra exchange, different operator, changed key SET,
@@ -168,10 +162,11 @@ def _sort_bracket_segments(s: str) -> str:
 
 
 def _plan_fingerprint_v2(df) -> str:
-    """Order-insensitive plan fingerprint: the legacy normalization plus
+    """Order-insensitive plan fingerprint: _normalized_plan plus
     bracket-segment sorting (see _sort_bracket_segments).  PLANS.json pins
-    v2 from r03 on; bench.py keeps emitting the legacy value alongside so
-    BENCH_r03 stays comparable with BENCH_r02's baseline fingerprints."""
+    it for every registry op, tests/test_fingerprints.py checks the
+    headline and costliest ops against it, and bench.py emits it per
+    query."""
     s = _normalized_plan(df)
     # RewriteDistinctAggregates numbers its distinct groups (gid) in
     # exprId-hash order too: which count() gets FILTER (gid = 1) vs
@@ -211,7 +206,6 @@ def main() -> None:
     _execute(REGISTRY["agg_groupby"].fn(spark, sf_dir).limit(1))
 
     timings: dict[str, float] = {}
-    plans: dict[str, str] = {}
     plans_v2: dict[str, str] = {}
     for name, op_id in HEADLINE.items():
         fn = REGISTRY[op_id].fn
@@ -226,7 +220,6 @@ def main() -> None:
             _execute(fn(spark, sf_dir))
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 4)
-        plans[name] = _plan_fingerprint(fn(spark, sf_dir))
         plans_v2[name] = _plan_fingerprint_v2(fn(spark, sf_dir))
 
     total = round(sum(timings.values()), 4)
@@ -238,7 +231,6 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                "plans": plans,
                 "plans_v2": plans_v2,
                 "load1": load1,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,

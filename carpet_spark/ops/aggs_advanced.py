@@ -11,7 +11,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..exprs import fp_scaled_long, fp_split_sum_of, fp_split_sum_over, lsum
-from ..ranks import group_percentiles_exact
+from ..ranks import group_percentiles_exact, ranked_by_range
 from ..registry import register
 from ..tables import load, spread
 
@@ -1681,14 +1681,15 @@ def agg_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically; rank ties break on the part key.
 
     Scale (100 TB): the fact table collapses to |parts| sums first;
-    the global cumulative sum then runs as a two-pass RANGE-PARTITIONED
-    prefix sum — range-shuffle on the ranking key, per-partition
-    split-sum partials prefix-summed into broadcast offsets, then
-    within-partition running sums — so NO single task ever holds the
-    |parts| axis (2e10 keys at 100 TB), unlike a bare
-    Window.partitionBy() cumulative.  This op is the demonstrated
-    swap-in that the other ranked-cumulative ops' "range-partition the
-    sort past task scale" notes point to; output is 3 rows."""
+    the global cumulative sum then runs as the two-pass RANGE-PARTITIONED
+    prefix sum of ranks.ranked_by_range with the revenue as its weight —
+    range-shuffle on the ranking key, per-partition split-sum partials
+    prefix-summed into broadcast offsets, then within-partition running
+    sums — so NO single task ever holds the |parts| axis (2e10 keys at
+    100 TB), unlike a bare Window.partitionBy() cumulative.  This op is
+    the demonstrated swap-in that the other ranked-cumulative ops'
+    "range-partition the sort past task scale" notes point to; output
+    is 3 rows."""
     li = load(spark, sf_dir, "lineitem")
     # single-long-ok: per-part sums are bounded (≈30 rows/part at any
     # SF ⇒ rev6 ≤ ~3e12, far under 2^63); every sum OVER the part space —
@@ -1699,47 +1700,14 @@ def agg_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
             fp_scaled_long(F.col("l_extendedprice"), 1_000_000)
         ).alias("rev6")
     )
-    # two-pass range-partitioned prefix sum (see the scale note):
-    # values are identical to a single global window because the range
-    # partitioner preserves the total order (rev6 DESC, partkey ASC) —
-    # partition ids ascend along it — and every sum is an exact decimal
-    NPART = 32
-    # localCheckpoint pins ONE materialization of the range shuffle:
-    # both consumers below (the offset aggregate and the join side)
-    # must see the SAME pid assignment, and the range partitioner's
-    # sampled boundaries are only guaranteed identical across branches
-    # while the optimizer dedupes them into one reused exchange —
-    # checkpointing makes the pid contract explicit instead of an
-    # exchange-reuse side effect (the _trade_edges pattern)
-    rp = (
-        part_rev.repartitionByRange(
-            NPART, F.col("rev6").desc(), F.col("l_partkey")
-        )
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    per_pid = rp.groupBy("pid").agg(
-        fp_split_sum_of(F.col("rev6")).alias("psum6")
-    )
-    # ≤NPART rows: the offset prefix and the grand total are driver-tiny
-    woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = per_pid.select(
-        "pid",
-        F.coalesce(F.sum("psum6").over(woff), F.lit(0)).alias("off6"),
-        F.sum("psum6").over(Window.partitionBy()).alias("total6"),
-    )
-    win = (
-        Window.partitionBy("pid")
-        .orderBy(F.col("rev6").desc(), F.col("l_partkey"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ranked = rp.join(F.broadcast(offsets), "pid").select(
-        "rev6",
-        (F.col("off6") + fp_split_sum_over(F.col("rev6"), win)).alias(
-            "cum6"
-        ),
-        "total6",
-    )
+    # values are identical to a single global window: the range
+    # partitioner preserves the total order (rev6 DESC, partkey ASC) and
+    # every sum is an exact decimal
+    ranked = ranked_by_range(
+        part_rev,
+        [F.col("rev6").desc(), "l_partkey"],
+        weight=F.col("rev6"),
+    ).select("rev6", F.col("_rank").alias("cum6"), F.col("_n").alias("total6"))
     cls = (
         F.when(F.col("cum6") <= 0.8 * F.col("total6"), "A")
         .when(F.col("cum6") <= 0.95 * F.col("total6"), "B")

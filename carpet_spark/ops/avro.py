@@ -29,7 +29,6 @@ defaulted — the Kafka-consumer contract.
 
 from __future__ import annotations
 
-import hashlib
 import io
 import json
 import os
@@ -45,13 +44,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load, spread
+from .scans import _sink_path
 
 _MAGIC = b"Obj\x01"
-
-# Bump when write_ocf's output bytes change for identical input — the
-# scan fixtures' write-once cache keys include it so no host ever reads
-# shards from an older writer.
-_AVRO_WRITER_VERSION = 1
 
 
 # ---------------------------------------------------------------------------
@@ -758,10 +753,7 @@ def sink_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("o_orderpriority"))
         .alias("o_priority"),
     )
-    out = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"),
-        f"carpet_avro_sink_{spark.sparkContext.applicationId}",
-    )
+    out = _sink_path(spark, "avro_sink")
     os.makedirs(out, exist_ok=True)
     for old in os.listdir(out):  # rerun within a session: replace the shards
         os.unlink(os.path.join(out, old))
@@ -770,8 +762,9 @@ def sink_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the read-side commit protocol — only shards from the one successful
     # attempt per partition are listed, so a retried/speculative task's
     # orphan files are never read (they'd duplicate rows under a plain
-    # directory listing).  Storage note: this local run shares /tmp; on a
-    # cluster ``out`` must be shared storage (DFS/NFS), like any sink.
+    # directory listing).  Storage note: this local run writes under the
+    # system temp dir; on a cluster ``out`` must be shared storage
+    # (DFS/NFS), like any sink.
     manifest = write_pandas_shards(o, out, _ROUNDTRIP_SCHEMA).collect()
     files = sorted(r.path for r in manifest)
 
@@ -831,22 +824,13 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): file-per-partition parallel scan; the fixture write
     below is a bounded {_SCAN_N}-row prep step (1k rows/file), not part
     of the measured plan."""
-    # fixture dir keyed by a CONTENT fingerprint (schema + geometry +
-    # writer version), not just the row count: the write-once fast path
-    # must never serve stale shards after a schema/generator/codec change
-    fp = hashlib.md5(
-        json.dumps([_SCAN_SCHEMA, _SCAN_N, _SCAN_FILES, _AVRO_WRITER_VERSION])
-        .encode()
-    ).hexdigest()[:10]
-    out = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"), f"carpet_avro_scan_{fp}"
-    )
+    out = _sink_path(spark, "avro_scan")
     os.makedirs(out, exist_ok=True)
     per = _SCAN_N // _SCAN_FILES
     for p in range(_SCAN_FILES):
         path = os.path.join(out, f"shard-{p}.avro")
         if os.path.exists(path):
-            continue  # deterministic content: write once, shared by sessions
+            continue  # deterministic content: write once per application
         rows = (
             (
                 i,
@@ -930,12 +914,7 @@ def scan_avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): resolution is a per-file DECODE-time plan (one name
     match when the file opens), so mixed-generation datasets cost
     nothing extra to scan; partition/split parallelism is unchanged."""
-    fp = hashlib.md5(
-        json.dumps([_EVO_V1, _EVO_V2, _EVO_N, _AVRO_WRITER_VERSION]).encode()
-    ).hexdigest()[:10]
-    out = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"), f"carpet_avro_evo_{fp}"
-    )
+    out = _sink_path(spark, "avro_evo")
     os.makedirs(out, exist_ok=True)
     p1 = os.path.join(out, "gen1.avro")
     if not os.path.exists(p1):  # deterministic content: write once

@@ -7,7 +7,10 @@ reach the parquet reader (asserted in tests/test_plans.py).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 
 import pyspark.sql.functions as F
@@ -56,13 +59,24 @@ _SINK_SLICE_ORACLE = """
     """
 
 
+@functools.cache
+def _sink_root() -> str:
+    """One fresh dir per interpreter under the system temp dir, holding
+    every sink/fixture dir this process writes; removed at interpreter
+    exit, so runs leave nothing behind."""
+    root = tempfile.mkdtemp(prefix="carpet_spark_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
 def _sink_path(spark: SparkSession, name: str) -> str:
     """Per-application sink dir: two concurrent sessions (parallel driver +
     pytest runs) must never overwrite each other's roundtrip mid read-back
-    (ADVICE r01) — applicationId is unique per SparkContext."""
+    (ADVICE r01) — the root is per process and applicationId is unique
+    per SparkContext.  The returned DataFrames read from it lazily, so
+    they are valid until the interpreter exits."""
     return os.path.join(
-        tempfile.gettempdir(),
-        f"carpet_spark_{name}_{spark.sparkContext.applicationId}",
+        _sink_root(), f"{name}_{spark.sparkContext.applicationId}"
     )
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..exprs import dsum, sql_dsum
 from ..registry import register
 from ..tables import load
+from .scans import _sink_path
 
 
 @register(
@@ -551,9 +552,7 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    out = os.path.join(
-        tempfile.gettempdir(), f"stream_sink_{uuid.uuid4().hex[:12]}"
-    )
+    out = _sink_path(spark, f"stream_sink_{uuid.uuid4().hex[:12]}")
     ckpt = os.path.join(out, "_ckpt")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
@@ -784,10 +783,7 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
         WriterCommitMessage,
     )
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"pyds_stream_sink_{spark.sparkContext.applicationId}_{uuid.uuid4().hex[:8]}",
-    )
+    out = _sink_path(spark, f"pyds_stream_sink_{uuid.uuid4().hex[:8]}")
     os.makedirs(out, exist_ok=True)
 
     @dataclass
@@ -924,10 +920,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     because one streaming query owns the target (Spark's own
     checkpoint lock enforces that), but two independent writers to
     one target would race the swap last-write-wins (USAGE.md)."""
-    target = os.path.join(
-        tempfile.gettempdir(),
-        f"upsert_target_{spark.sparkContext.applicationId}_{uuid.uuid4().hex[:8]}",
-    )
+    target = _sink_path(spark, f"upsert_target_{uuid.uuid4().hex[:8]}")
     os.makedirs(target, exist_ok=True)
     manifest = os.path.join(target, "_LATEST")
 
@@ -1004,10 +997,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is exactly how a daily 100 TB ingest works — each run
     bills only the new partitions, state lives in the checkpoint, and
     restart cost is O(new data), not O(history)."""
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"ckpt_resume_{spark.sparkContext.applicationId}_{uuid.uuid4().hex[:8]}",
-    )
+    base = _sink_path(spark, f"ckpt_resume_{uuid.uuid4().hex[:8]}")
     src = os.path.join(base, "src")
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "_ckpt")
@@ -1080,10 +1070,7 @@ def stream_multi_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     Watermarks propagate as the MIN across sources — a slow source
     holds back event-time progress, the documented cross-source
     caveat."""
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"multi_src_{spark.sparkContext.applicationId}_{uuid.uuid4().hex[:8]}",
-    )
+    base = _sink_path(spark, f"multi_src_{uuid.uuid4().hex[:8]}")
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     schema = ev.schema
     for tag, pred in (("a", F.col("event_id") % 2 == 0),

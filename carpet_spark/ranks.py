@@ -1,23 +1,35 @@
-"""Partition-parallel global ranks and exact percentiles (r12, VERDICT
-items 2 and 8; optimization guide §2/§5).
+"""Partition-parallel global ranks, running sums and exact percentiles
+(r12, VERDICT items 2 and 8; optimization guide §2/§5).
 
-A ``Window.orderBy(...)`` row_number and Spark's exact ``percentile``
-aggregate share the same scale-killer: every row of the (group's) data
-funnels through ONE task — the window's single partition, or the final
-merge of the percentile aggregate's value buffer.  Fine for bounded audit
-extracts; wrong as a recurring 100 TB pattern.  Both are replaced here by
-the classic two-phase range-partitioned rank:
+A ``Window.orderBy(...)`` row_number or running sum and Spark's exact
+``percentile`` aggregate share the same scale-killer: every row of the
+(group's) data funnels through ONE task — the window's single partition,
+or the final merge of the percentile aggregate's value buffer.  Fine for
+bounded audit extracts; wrong as a recurring 100 TB pattern.  Both are
+replaced here by the classic two-pass range-partitioned prefix
+(``ranked_by_range``, the one place this idea lives):
 
 1. ``repartitionByRange`` on (group, order) — the same sampled range
    exchange a global sort pays; equal keys land in one partition;
-2. per-(group, partition) row counts — a map-side-combined aggregate of
-   |partitions| rows — cumulated into per-partition global offsets;
-3. per-(group, partition) local ``row_number`` + broadcast offset join =
-   the exact global rank, computed |partitions|-wide.
+2. per-(group, partition) partials — row counts, or exact split sums of
+   a weight — a map-side-combined aggregate of |partitions| rows,
+   cumulated into per-partition global offsets and the group total;
+3. per-(group, partition) local ``row_number`` (or running split sum) +
+   broadcast offset join = the exact global rank (or running sum),
+   computed |partitions|-wide.
 
-The two consumers of the range exchange (counts and local ranks) share
-one shuffle via ReuseExchange; partition ids are therefore consistent
-between them by construction.
+The two consumers of the range layout (the partials and the local
+ranks) share one ``localCheckpoint`` of it, not one shuffle.  The range
+bounds come from a nondeterministic SAMPLE of the data: if the two
+consumers read different materializations (AQE coalescing each reader
+differently, or exchange reuse not firing), ``spark_partition_id``
+disagrees between them and the composed ranks silently break (caught at
+sf0.1: 3,016 of 6,000 sampled rows).  The eager checkpoint fixes the
+layout ONCE, so both read the identical partitions by construction.
+Its cost: one full copy of the projected input (MEMORY_AND_DISK on the
+executors) and a Spark job at plan construction.  Its failure mode:
+lineage is truncated, so losing an executor that holds a checkpointed
+block raises instead of silently recomputing with fresh bounds.
 """
 
 from __future__ import annotations
@@ -27,6 +39,8 @@ from operator import and_, or_
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .exprs import fp_split_sum_of, fp_split_sum_over
 
 
 def _null_safe_join(
@@ -48,53 +62,63 @@ def _null_safe_join(
 
 
 def ranked_by_range(
-    df: DataFrame, order_cols: list[str], group_cols: list[str] | None = None
+    df: DataFrame,
+    order: list[str | Column],
+    group_cols: list[str] | None = None,
+    weight: Column | None = None,
 ) -> DataFrame:
-    """Attach ``_rank`` — the 1-based rank of each row within its group
-    under ``order_cols`` ascending — computed partition-parallel (no
-    single-task sort).  Ties take arbitrary order WITHIN equal keys (same
-    as any row_number over a non-total order): callers must either pass a
-    total order (unique keys) or be indifferent to tie order (percentile
-    extraction reads values, and equal keys have equal values)."""
+    """Attach ``_rank`` and ``_n``, computed partition-parallel (no
+    single-task sort).  ``order`` holds column names (ascending) or sort
+    Columns such as ``F.col("x").desc()``.
+
+    Without ``weight``, ``_rank`` is the 1-based rank of each row within
+    its group under ``order`` and ``_n`` the group's row count (longs).
+    With an exact fixed-point long ``weight``, ``_rank`` is the running
+    sum of the weight up to and including the row and ``_n`` the group's
+    total weight (exact decimal split sums, exprs.fp_split_sum_*).
+
+    Ties take arbitrary order WITHIN equal keys (same as any row_number
+    over a non-total order): callers must either pass a total order
+    (unique keys) or be indifferent to tie order (percentile extraction
+    reads values, and equal keys have equal values).
+
+    Partition count: explicit and scale-adaptive (max of core count and
+    configured shuffle width) so AQE cannot re-group the checkpointed
+    layout."""
     group_cols = list(group_cols or [])
-    key = [F.col(c) for c in group_cols + list(order_cols)]
-    # The range partitioning is consumed TWICE (counts and local ranks),
-    # and its bounds come from a nondeterministic SAMPLE of the data — if
-    # the two consumers do not read the same materialized shuffle (AQE
-    # coalescing each reader differently, or stage reuse not firing),
-    # spark_partition_id disagrees between the passes and the composed
-    # ranks silently break (caught at sf0.1: 3016 of 6000 sampled rows).
-    # localCheckpoint materializes the partitioning ONCE, eagerly, so both
-    # passes read the identical partition layout BY CONSTRUCTION — the
-    # same within-query lineage-pin the kmeans++/pagerank iterations use;
-    # its storage is MEMORY_AND_DISK and a lost replica raises instead of
-    # silently recomputing with fresh bounds.  Partition count: explicit
-    # and scale-adaptive (max of core count and configured shuffle width)
-    # so AQE cannot re-group the checkpointed layout either.
+    order = [F.col(c) if isinstance(c, str) else c for c in order]
     sess = df.sparkSession
-    try:
-        width = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        width = 0
-    n = max(sess.sparkContext.defaultParallelism, width)
-    rr = df.repartitionByRange(n, *key).localCheckpoint()
+    n = max(
+        sess.sparkContext.defaultParallelism,
+        int(sess.conf.get("spark.sql.shuffle.partitions")),
+    )
+    rr = df.repartitionByRange(
+        n, *[F.col(c) for c in group_cols], *order
+    ).localCheckpoint()
     base = rr.withColumn("_pid", F.spark_partition_id())
-    cnts = base.groupBy(*group_cols, "_pid").agg(F.count(F.lit(1)).alias("_c"))
-    w_off = (
-        Window.partitionBy(*group_cols) if group_cols else Window.partitionBy()
-    ).orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = cnts.select(
+    w_lr = (
+        Window.partitionBy(*group_cols, "_pid")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    if weight is None:
+        part, run = F.count(F.lit(1)), F.row_number().over(w_lr)
+    else:
+        part, run = fp_split_sum_of(weight), fp_split_sum_over(weight, w_lr)
+    parts = base.groupBy(*group_cols, "_pid").agg(part.alias("_c"))
+    w_grp = Window.partitionBy(*group_cols)
+    w_off = w_grp.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+    offs = parts.select(
         *group_cols,
         "_pid",
         F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off"),
+        F.sum("_c").over(w_grp).alias("_n"),
     )
-    w_lr = Window.partitionBy(*(group_cols + ["_pid"])).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    ranked = base.withColumn("_lr", F.row_number().over(w_lr))
     return (
-        _null_safe_join(ranked, F.broadcast(offs), group_cols + ["_pid"])
-        .withColumn("_rank", (F.col("_off") + F.col("_lr")).cast("long"))
+        _null_safe_join(
+            base.withColumn("_lr", run), F.broadcast(offs), group_cols + ["_pid"]
+        )
+        .withColumn("_rank", F.col("_off") + F.col("_lr"))
         .drop("_pid", "_lr", "_off")
     )
 
@@ -134,11 +158,6 @@ def group_percentiles_exact(
         *group_cols, F.col(value_col).cast("double").alias("_x")
     ).filter(F.col("_x").isNotNull())
     ranked = ranked_by_range(vals, ["_x"], group_cols)
-    gtot = vals.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("_n"))
-    if group_cols:
-        j = _null_safe_join(ranked, F.broadcast(gtot), group_cols)
-    else:
-        j = ranked.crossJoin(F.broadcast(gtot))
 
     def pos_expr(p: float) -> Column:
         return F.lit(float(p)) * (F.col("_n") - F.lit(1)).cast("double")
@@ -148,7 +167,7 @@ def group_percentiles_exact(
         pos = pos_expr(p)
         keep.append(F.col("_rank") == F.floor(pos) + F.lit(1))
         keep.append(F.col("_rank") == F.ceil(pos) + F.lit(1))
-    sel = j.filter(reduce(or_, keep))
+    sel = ranked.filter(reduce(or_, keep))
 
     aggs = []
     for name, p in percentiles.items():

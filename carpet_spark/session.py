@@ -70,14 +70,15 @@ def get_spark(app_name: str = "carpet_spark", cpus: int | None = None) -> SparkS
 
     Scale notes: on a real cluster these builder confs move to spark-submit;
     AQE handles partition coalescing + skew joins at runtime, shuffle
-    partitions sized ~2-3x total cores (here: small local default).
+    partitions sized ~2-3x total cores (here: small local default).  The
+    SQL confs in RUNTIME_CONFS (shuffle width, time zone, ...) are set on
+    the returned session by ensure_runtime_confs, not repeated here.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE", "8"))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -109,12 +110,6 @@ def get_spark(app_name: str = "carpet_spark", cpus: int | None = None) -> SparkS
         # with spark.conf.set on the returned session.
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.hadoop.parquet.compression.codec.zstd.level", "1")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            RUNTIME_CONFS["spark.sql.optimizer.excludedRules"],
-        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -26,9 +26,10 @@ _DURATIONS_FILE = os.path.join(
 # failures).  A bare full-directory run (`pytest tests/ -x -q`, the
 # driver's invocation) therefore selects the DRIVER-FAST subset: every
 # fast module in full, plus one oracle-parity + output-schema op per
-# registry family (first alphabetically — deterministic) and the nine
-# headline bench ops.  ~2,4xx tests, < 5 min, covering every plan pin,
-# every micro-contract and one end-to-end DuckDB parity per family.
+# registry family (first alphabetically — deterministic) and the
+# _FAST_ALWAYS_OPS below.  About 1,030 tests, 6-7 min on 4 cores,
+# covering every plan pin, every micro-contract and one end-to-end DuckDB
+# parity per family.
 #
 # The FULL gate is unchanged and remains the builder-side entrypoint:
 #   python scripts/run_tests_sharded.py 4        (CARPET_SHARD set per worker)
@@ -55,6 +56,8 @@ _FAST_ALWAYS_OPS |= {
     "stream_interval_join", "dedup_near_embedding", "sim_knn_brute",
     "ts_partial_autocorrelation", "sim_ann_ivf",
 }
+# ops moved onto ranks.ranked_by_range after r12
+_FAST_ALWAYS_OPS |= {"agg_abc_classification"}
 # per-op parameterized modules that get the family sample; all other
 # modules are kept whole
 _FAST_SAMPLED_MODULES = ("test_oracle_parity.py", "test_output_schemas.py")

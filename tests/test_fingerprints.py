@@ -1,153 +1,89 @@
-"""Pinned physical-plan fingerprints for the 9 headline bench queries
-(r02 VERDICT item 5).
+"""Pinned physical-plan fingerprints (r02 VERDICT item 5) for the 9
+headline bench queries and the 20 most expensive registry ops.
 
-BENCH_r02.json introduced per-query plan fingerprints as the drift-vs-
-regression discriminator: an unchanged fingerprint with a moved timing is
-machine drift; a changed fingerprint is a plan change that must be
-explained.  This test makes that check CI-local — a plan regression fails
-here immediately instead of waiting for the next round's bench diff.
+An unchanged fingerprint with a moved timing is machine drift; a changed
+fingerprint is a plan change that must be explained.  This test makes
+that check CI-local: a plan regression in these ops fails here
+immediately instead of waiting for the next registry-wide regeneration.
 
-Fingerprints are SF-independent (verified identical at sf0.01 and sf0.1
-after the r03 normalization fix in bench._plan_fingerprint), so the test
-pins one value per query and runs at the suite's sf_dir.
-
-Provenance of the pinned values vs BENCH_r02.json's:
-
-- window_rank, topk_lineitem, distinct_users, wordcount, tumbling_1h,
-  dedup_docs: byte-identical to BENCH_r02 — unchanged plans.
-- q1_pricing_summary, q3_top_orders, q5_region_revenue: changed in r03 by
-  the intentional lsum/lavg rewrite (F.round -> sign-aware truncation,
-  commit b486862, ~1.6x on the Q1 shape) plus the fingerprint
-  normalization fix (maxMetadataStringLength raise) that made q3/q5
-  SF-stable at all.
-
-When a deliberate plan improvement moves a fingerprint, re-pin it HERE in
-the same commit with the reason in the commit message.
+PLANS.json (scripts/gen_plan_fingerprints.py, bench._plan_fingerprint_v2)
+is the one source of the pinned values; fingerprints are SF- and
+core-count-independent, so the test runs at the suite's sf_dir.  When a
+deliberate plan change moves one, regenerate PLANS.json in the same
+commit and give the reason in the commit message.
 """
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 import pytest
 
-from bench import HEADLINE, _plan_fingerprint
+from bench import HEADLINE, _plan_fingerprint_v2
 from carpet_spark.registry import REGISTRY
 
-PINNED = {
-    # q1/q3/q5 re-pinned r11 optimization: the single-CASE
-    # fixed-point conversion (exprs._fp_scaled_long_at) halves every
-    # money sum's expression tree — value-identical per row, plan
-    # fingerprint moves.  tumbling_1h carries the r10 post-close
-    # events.value ingest sanitization (b776a36 re-baseline).
-    "q1_pricing_summary": "083172d0086b",
-    "q3_top_orders": "0106f33da939",
-    "q5_region_revenue": "6fd8e1e4c38f",
-    "window_rank": "63b0dd84f925",
-    "topk_lineitem": "94072738dbbb",
-    "distinct_users": "c043d40e06e3",
-    "wordcount": "1c44349af4ab",
-    "tumbling_1h": "9bcce0da3842",
-    "dedup_docs": "0dca9d0652c2",
-}
+PLANS = json.loads((ROOT / "PLANS.json").read_text())
 
-
-def test_pin_set_matches_headline():
-    assert set(PINNED) == set(HEADLINE)
-
-
-@pytest.mark.parametrize("name", sorted(PINNED))
-def test_headline_plan_fingerprint_pinned(spark, sf_dir, name):
-    df = REGISTRY[HEADLINE[name]].fn(spark, sf_dir)
-    got = _plan_fingerprint(df)
-    assert got == PINNED[name], (
-        f"{name}: physical plan changed (fingerprint {got} != pinned "
-        f"{PINNED[name]}). If intentional, re-pin with the reason in the "
-        "commit message; if not, diff .explain('formatted') vs the last "
-        "good commit."
-    )
-
-
-# ---------------------------------------------------------------------------
 # Top-20 most EXPENSIVE registry ops (r06 VERDICT item 5): the bench set
-# pins the headline queries, but a plan regression in the heaviest
+# covers the headline queries, but a plan regression in the heaviest
 # non-bench ops (iterative graph kernels, Python data sources, streaming
 # joins, pandas cogroups) would otherwise surface only as a slow driver
 # round.  Ranked by measured Spark-side wall time over a full-registry
-# run at sf0.01 (r7: 459 s total); fingerprints are the order-insensitive
-# v2 form, pinned from PLANS.json at the same commit.  Re-pin HERE and
-# regenerate PLANS.json in the same commit when a plan change is
-# intentional.
-# ---------------------------------------------------------------------------
-
-from bench import _plan_fingerprint_v2  # noqa: E402
-
-# r11 re-pins: 4 ops for the b776a36 re-baseline completion (ingest
-# contract), then agg_abc_xyz_class / sink_manifest_publish again for
-# the single-CASE fixed-point rewrite; values == the committed
-# PLANS.json.
-EXPENSIVE_PINNED = [
-    ("graph_k_core_peel", "9eebd4710506"),            # 7.40s
-    ("decontaminate_substring", "a70a993d9516"),      # 7.26s
-    ("graph_pagerank", "904c43197a93"),               # 5.26s
-    ("stream_foreachbatch_upsert", "924e6d1d904e"),   # 4.65s
-    ("scan_python_datasource_pushdown", "612948376226"),  # 4.64s
-    # re-pinned r12 (ADVICE r11): float vectors feed banded_signatures
-    # (half the Arrow payload; bit-identical signatures), dbl_vec applies
-    # only on the scoring frame
-    ("dedup_near_embedding_ann", "91266d6f1adb"),     # 4.62s -> 3.1s -> 2.4s
-    ("sim_mmr_rerank", "a607781b9efb"),               # 4.57s
-    ("sink_python_datasource_roundtrip", "cda8daa486c8"),  # 4.45s
-    # re-pinned r9: explicit NULL-feature/label drop before fit+score
-    # (NULL-regime finding — VectorAssembler aborts on incomplete rows)
-    # re-pinned r11 optimization: token split materialized in its own
-    # projection (the five feature exprs each re-split the text)
-    ("quality_train_score", "2a9f52604af3"),          # 4.12s
-    # re-pinned r11 optimization: both cogroup sides pre-partitioned by
-    # key at defaultParallelism (ClusteredDistribution satisfied, the ~15k
-    # per-key Python calls fan out over every core); re-pinned once more
-    # when v2 began normalizing a defaultParallelism repartition count,
-    # so the pin holds at any core count
-    ("udf_cogrouped_pandas", "323acd69f17e"),         # 3.97s
-    ("dq_primary_key_check", "d3e3fbab875d"),         # 3.79s
-    # re-pinned r9: intentional hi/lo-split escalation of the op's
-    # inline fixed-point sums (sweep commit 36a6b65)
-    ("agg_abc_xyz_class", "6c8b5f26ba24"),            # 3.75s
-    # splits=N normalized out of the v2 form in r7 (Range parallelism is
-    # an env knob, not plan shape) — this is the only range-built pin
-    # re-pinned r12: `daily` localCheckpointed (events scanned once, not
-    # 3x — the returned plan now tops out at the checkpoint RDD scan)
-    ("ts_partial_autocorrelation", "eb9171f4b177"),   # 3.67s -> 0.5s warm
-    ("stream_interval_join", "ff48a261270e"),         # 3.63s
-    ("graph_bfs_hops", "f11fa21b5f6d"),               # 3.54s
-    # re-pinned r11 optimization: spread + per-vector norm hoist on the
-    # all-pairs probe scoring; re-pinned with the defaultParallelism
-    # repartition-count normalization (see udf_cogrouped_pandas)
-    ("eval_rec_catalog_coverage", "f1354589133d"),    # 3.15s
-    ("stream_multi_source_union", "617b4e992d85"),    # 3.13s
-    # re-pinned r11: iterative-lineage truncation (1-row argmax
-    # localCheckpoints — 94 Exchanges / 27 distance passes -> linear)
-    ("emb_kmeans_pp_init", "4782cd0e9398"),           # 3.08s
-    ("dedup_clusters", "d879a457a638"),               # 2.98s
-    ("sink_manifest_publish", "5ff57102748e"),        # 2.98s (re-pinned r9: split-sum escalation)
+# run at sf0.01 (r7: 459 s total).
+EXPENSIVE = [
+    "graph_k_core_peel",                 # 7.40s
+    "decontaminate_substring",           # 7.26s
+    "graph_pagerank",                    # 5.26s
+    "stream_foreachbatch_upsert",        # 4.65s
+    "scan_python_datasource_pushdown",   # 4.64s
+    "dedup_near_embedding_ann",          # 4.62s -> 3.1s -> 2.4s
+    "sim_mmr_rerank",                    # 4.57s
+    "sink_python_datasource_roundtrip",  # 4.45s
+    "quality_train_score",               # 4.12s
+    "udf_cogrouped_pandas",              # 3.97s
+    "dq_primary_key_check",              # 3.79s
+    "agg_abc_xyz_class",                 # 3.75s
+    # the one range-built op (Range splits=N is normalized out of v2)
+    "ts_partial_autocorrelation",        # 3.67s -> 0.5s warm
+    "stream_interval_join",              # 3.63s
+    "graph_bfs_hops",                    # 3.54s
+    "eval_rec_catalog_coverage",         # 3.15s
+    "stream_multi_source_union",         # 3.13s
+    "emb_kmeans_pp_init",                # 3.08s
+    "dedup_clusters",                    # 2.98s
+    "sink_manifest_publish",             # 2.98s
 ]
 
 
-@pytest.mark.parametrize(
-    "name,pinned", EXPENSIVE_PINNED, ids=[n for n, _ in EXPENSIVE_PINNED]
-)
-def test_expensive_plan_fingerprint_pinned(spark, sf_dir, name, pinned):
-    df = REGISTRY[name].fn(spark, sf_dir)
-    got = _plan_fingerprint_v2(df)
-    assert got == pinned, (
-        f"{name}: physical plan changed (v2 fingerprint {got} != pinned "
-        f"{pinned}). If intentional, re-pin here AND regenerate PLANS.json "
-        "in the same commit; if not, diff .explain('formatted') vs the "
-        "last good commit."
+def _assert_plan_pinned(spark, sf_dir, op: str) -> None:
+    got = _plan_fingerprint_v2(REGISTRY[op].fn(spark, sf_dir))
+    assert got == PLANS[op], (
+        f"{op}: physical plan changed (v2 fingerprint {got} != PLANS.json "
+        f"{PLANS[op]}). If intentional, regenerate PLANS.json "
+        "(scripts/gen_plan_fingerprints.py) in the same commit; if not, "
+        "diff .explain('formatted') vs the last good commit."
     )
+
+
+def test_pin_set_matches_headline():
+    ops = list(HEADLINE.values()) + EXPENSIVE
+    assert len(set(ops)) == 29
+    assert all(not PLANS[op].startswith("ERROR") for op in ops)
+
+
+@pytest.mark.parametrize("name", sorted(HEADLINE))
+def test_headline_plan_fingerprint_pinned(spark, sf_dir, name):
+    _assert_plan_pinned(spark, sf_dir, HEADLINE[name])
+
+
+@pytest.mark.parametrize("name", EXPENSIVE)
+def test_expensive_plan_fingerprint_pinned(spark, sf_dir, name):
+    _assert_plan_pinned(spark, sf_dir, name)
 
 
 @pytest.mark.parametrize("cols", [(), ("id",)], ids=["round_robin", "hash"])

@@ -810,3 +810,12 @@ def test_python_datasource_pushdown_prunes_splits(spark, sf_dir):
     for frag in ("EqualTo(part,3)", "GreaterThanOrEqual(id,2000)", "LessThan(id,9000)"):
         assert frag in line, line
     assert df.rdd.getNumPartitions() == 1
+
+
+def test_agg_percentile_scans_lineitem_once(spark, sf_dir):
+    """Exact percentiles take the group sizes from the range rank's
+    per-partition counts, so the base table is scanned once (the group
+    axis); the ranked values come from the checkpointed range layout."""
+    df = REGISTRY["agg_percentile"].fn(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
