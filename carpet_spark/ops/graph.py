@@ -94,29 +94,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation-to-nation trade graph.  See module docstring for why the
     arithmetic is exact-integer and the loop is the Pregel-on-DataFrames
     shape."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs"), F.sum("w").alias("total_w")
-    )
-    edges = (
-        pairs.crossJoin(F.broadcast(tot))
-        .filter(F.col("w") * F.col("n_pairs") > F.col("total_w"))
-        .select("src", "dst")
-        .localCheckpoint()  # edge list computed once, lineage truncated
-    )
+    edges = _trade_edges(spark, sf_dir)
     verts = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("v")
     )
@@ -698,8 +676,8 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The module's canonical directed trade edge set (same derivation as
-    graph_pagerank: above-mean-volume nation→nation pairs), shared by the
+    """The module's canonical directed trade edge set (above-mean-volume
+    nation→nation pairs), shared by graph_pagerank and the
     edge-statistics ops below.  localCheckpoint: computed once per call,
     lineage truncated before self-joins."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")

@@ -60,11 +60,14 @@ _SINK_SLICE_ORACLE = """
 
 
 @functools.cache
-def _sink_root() -> str:
-    """One fresh dir per interpreter under the system temp dir, holding
-    every sink/fixture dir this process writes; removed at interpreter
-    exit, so runs leave nothing behind."""
-    root = tempfile.mkdtemp(prefix="carpet_spark_")
+def _sink_root(base: str | None = None) -> str:
+    """One fresh dir per interpreter under `base` (default: the system
+    temp dir), holding every sink/fixture/checkpoint dir this process
+    writes there; removed at interpreter exit, so runs leave nothing
+    behind."""
+    if base:
+        os.makedirs(base, exist_ok=True)
+    root = tempfile.mkdtemp(prefix="carpet_spark_", dir=base)
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     return root
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..exprs import dsum, sql_dsum
 from ..registry import register
 from ..tables import load
-from .scans import _sink_path
+from .scans import _sink_path, _sink_root
 
 
 @register(
@@ -140,7 +140,10 @@ def _scratch_dir() -> str:
     visible to every node of a cluster, and even throwaway availableNow
     state-store files are read back by downstream batches (r12, VERDICT
     item 7).  A real deployment's RESUMABLE checkpoints belong on durable
-    shared storage — override via SPARK_GRAFT_CKPT_DIR either way."""
+    shared storage — override via SPARK_GRAFT_CKPT_DIR either way.
+    Callers put their checkpoints in ``scans._sink_root(_scratch_dir())``,
+    a per-process dir under this base removed at interpreter exit, so
+    tmpfs checkpoints do not pile up in RAM."""
     env = os.environ.get("SPARK_GRAFT_CKPT_DIR")
     if env:
         return env
@@ -166,13 +169,12 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_runtime_confs(spark)
     # the file stream source requires a directory; stage the single events
-    # file behind a symlink dir (zero-copy)
-    # stable digest, NOT Python hash(): per-process hash randomization would
-    # mint a fresh staging dir every run and accumulate stale symlink dirs
+    # file behind a symlink dir (zero-copy), one per sf_dir under the
+    # per-process sink root, which is removed at exit
     import hashlib
 
     stage = os.path.join(
-        tempfile.gettempdir(),
+        _sink_root(),
         f"events_stream_{hashlib.sha256(sf_dir.encode()).hexdigest()[:16]}",
     )
     os.makedirs(stage, exist_ok=True)
@@ -206,7 +208,7 @@ def _run_available_now(
     last_exc: Exception | None = None
     for attempt in range(2):
         ckpt = os.path.join(
-            _scratch_dir(), f"ckpt_{query_name}_{uuid.uuid4().hex}"
+            _sink_root(_scratch_dir()), f"ckpt_{query_name}_{uuid.uuid4().hex}"
         )
         q = (
             stream_df.writeStream.format("memory")
@@ -477,7 +479,7 @@ def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_runtime_confs(spark)
     stage = os.path.join(
-        tempfile.gettempdir(),
+        _sink_root(),
         f"docs_stream_{hashlib.sha256(sf_dir.encode()).hexdigest()[:16]}",
     )
     os.makedirs(stage, exist_ok=True)
@@ -831,7 +833,9 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
 
     spark.dataSource.register(JsonlStreamSink)
     stream = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    ckpt = os.path.join(_scratch_dir(), f"ckpt_pyds_sink_{uuid.uuid4().hex}")
+    ckpt = os.path.join(
+        _sink_root(_scratch_dir()), f"ckpt_pyds_sink_{uuid.uuid4().hex}"
+    )
     q = (
         stream.writeStream.format("jsonlsink")
         .option("path", out)
@@ -951,7 +955,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.replace(tmp, manifest)  # atomic commit
 
     ckpt = os.path.join(
-        _scratch_dir(), f"ckpt_upsert_{uuid.uuid4().hex}"
+        _sink_root(_scratch_dir()), f"ckpt_upsert_{uuid.uuid4().hex}"
     )
     q = (
         _events_stream(spark, sf_dir)

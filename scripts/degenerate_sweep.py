@@ -23,9 +23,12 @@ divergence a real corpus WILL eventually hit (empty segment, flat
 series, all-dup shard).  Cross-engine rule under test: Spark non-ANSI
 x/0 = NULL vs DuckDB IEEE inf/nan, log(0), empty-aggregate NULLs, etc.
 
-Usage: python scripts/degenerate_sweep.py [--only op1,op2]
-Writes the fixture under /tmp and prints PASS/DIVERGE/ERROR per op plus
-a summary; exits 0 always (it is a survey, not a gate).
+Usage: python scripts/degenerate_sweep.py [--empty|--single|--nulls|
+       --extreme|--boundary|--shuffled|--skew|--hostile|--nonfinite]
+       [--only op1,op2]
+Writes the chosen regime's fixture (default: the flat one) under /tmp
+and prints PASS/DIVERGE/ERROR per op plus a summary; exits 0 always (it
+is a survey, not a gate).
 """
 
 from __future__ import annotations
@@ -40,106 +43,88 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+
+def _write(fix_dir: str, table: str, cols: dict | pa.Table) -> None:
+    """Publish `cols` (column name -> values: a dict or a pyarrow Table)
+    as fix_dir/table.parquet with the table's production schema, read
+    from its footer under _SRC_SF, so every regime matches the real
+    tables."""
+    schema = pq.read_schema(f"{_SRC_SF}/{table}.parquet").remove_metadata()
+    os.makedirs(fix_dir, exist_ok=True)
+    # Atomic publish: concurrent sessions (pytest + an interactive
+    # sweep) share /tmp; a reader must never see a half-written file.
+    tmp = f"{fix_dir}/.{table}.parquet.tmp.{os.getpid()}"
+    pq.write_table(pa.Table.from_pydict(cols, schema=schema), tmp)
+    os.replace(tmp, f"{fix_dir}/{table}.parquet")
+
+
 FIX = "/tmp/carpet_degenerate_fixture"
 
 
 def build_fixture() -> str:
-    os.makedirs(FIX, exist_ok=True)
     D = dt.datetime(1996, 6, 15)          # inside every TPC-H date cut
     E = dt.datetime(2024, 1, 5, 12, 0, 0)  # inside the events month
 
-    def write(name, cols, schema):
-        # Atomic publish: concurrent sessions (pytest + an interactive
-        # sweep) share /tmp; a reader must never see a half-written file.
-        tmp = f"{FIX}/.{name}.parquet.tmp.{os.getpid()}"
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), tmp)
-        os.replace(tmp, f"{FIX}/{name}.parquet")
-
-    write("region", {"r_regionkey": [0], "r_name": ["AMERICA"]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": [0, 1], "n_name": ["BRAZIL", "CANADA"], "n_regionkey": [0, 0]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()), ("n_regionkey", pa.int32())])
-    write("customer",
-          {"c_custkey": [1, 2, 3], "c_name": ["Customer#1"] * 3,
-           "c_nationkey": [0, 0, 0], "c_acctbal": [100.0] * 3,
-           "c_mktsegment": ["BUILDING"] * 3},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
-    write("supplier",
-          {"s_suppkey": [1, 2], "s_name": ["Supplier#1", "Supplier#2"],
-           "s_nationkey": [0, 1], "s_acctbal": [50.0, 50.0]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
-    write("part",
-          {"p_partkey": [1, 2, 3], "p_name": ["green part"] * 3,
-           "p_brand": ["Brand#11"] * 3, "p_type": ["ECONOMY BRASS"] * 3,
-           "p_size": [10, 10, 10], "p_retailprice": [900.0] * 3},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
+    _write(FIX, "region", {"r_regionkey": [0], "r_name": ["AMERICA"]})
+    _write(FIX, "nation",
+           {"n_nationkey": [0, 1], "n_name": ["BRAZIL", "CANADA"],
+            "n_regionkey": [0, 0]})
+    _write(FIX, "customer",
+           {"c_custkey": [1, 2, 3], "c_name": ["Customer#1"] * 3,
+            "c_nationkey": [0, 0, 0], "c_acctbal": [100.0] * 3,
+            "c_mktsegment": ["BUILDING"] * 3})
+    _write(FIX, "supplier",
+           {"s_suppkey": [1, 2], "s_name": ["Supplier#1", "Supplier#2"],
+            "s_nationkey": [0, 1], "s_acctbal": [50.0, 50.0]})
+    _write(FIX, "part",
+           {"p_partkey": [1, 2, 3], "p_name": ["green part"] * 3,
+            "p_brand": ["Brand#11"] * 3, "p_type": ["ECONOMY BRASS"] * 3,
+            "p_size": [10, 10, 10], "p_retailprice": [900.0] * 3})
     n_orders = 6
-    write("orders",
-          {"o_orderkey": list(range(1, n_orders + 1)),
-           "o_custkey": [1, 1, 2, 2, 3, 3],
-           "o_orderstatus": ["F"] * n_orders,
-           "o_totalprice": [1000.0] * n_orders,       # CONSTANT series
-           "o_orderdate": [D] * n_orders,             # ONE day
-           "o_orderpriority": ["3-MEDIUM"] * n_orders},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")), ("o_orderpriority", pa.string())])
+    _write(FIX, "orders",
+           {"o_orderkey": list(range(1, n_orders + 1)),
+            "o_custkey": [1, 1, 2, 2, 3, 3],
+            "o_orderstatus": ["F"] * n_orders,
+            "o_totalprice": [1000.0] * n_orders,       # CONSTANT series
+            "o_orderdate": [D] * n_orders,             # ONE day
+            "o_orderpriority": ["3-MEDIUM"] * n_orders})
     n_li = 6
-    write("lineitem",
-          {"l_orderkey": [1, 1, 2, 3, 4, 5],
-           "l_partkey": [1, 2, 1, 2, 3, 3],
-           "l_suppkey": [1, 2, 1, 2, 1, 2],
-           "l_linenumber": [1, 2, 1, 1, 1, 1],
-           "l_quantity": [5.0] * n_li,                 # constant
-           "l_extendedprice": [500.0] * n_li,
-           "l_discount": [0.0] * n_li,                 # zero discount
-           "l_tax": [0.0] * n_li,
-           "l_returnflag": ["N"] * n_li,               # one flag
-           "l_linestatus": ["O"] * n_li,
-           "l_shipdate": [D] * n_li},                  # ONE day
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    _write(FIX, "lineitem",
+           {"l_orderkey": [1, 1, 2, 3, 4, 5],
+            "l_partkey": [1, 2, 1, 2, 3, 3],
+            "l_suppkey": [1, 2, 1, 2, 1, 2],
+            "l_linenumber": [1, 2, 1, 1, 1, 1],
+            "l_quantity": [5.0] * n_li,                 # constant
+            "l_extendedprice": [500.0] * n_li,
+            "l_discount": [0.0] * n_li,                 # zero discount
+            "l_tax": [0.0] * n_li,
+            "l_returnflag": ["N"] * n_li,               # one flag
+            "l_linestatus": ["O"] * n_li,
+            "l_shipdate": [D] * n_li})                 # ONE day
     n_ev = 3
-    write("events",
-          {"event_id": [1, 2, 3],
-           "ts": [E, E + dt.timedelta(minutes=1), E + dt.timedelta(minutes=2)],
-           "user_id": [7, 7, 7],                       # ONE user
-           "event_type": ["click"] * n_ev,             # no purchase/signup/view
-           "value": [10.0] * n_ev,                     # constant
-           "props": ['{"k": 1}'] * n_ev},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    _write(FIX, "events",
+           {"event_id": [1, 2, 3],
+            "ts": [E, E + dt.timedelta(minutes=1), E + dt.timedelta(minutes=2)],
+            "user_id": [7, 7, 7],                       # ONE user
+            "event_type": ["click"] * n_ev,             # no purchase/signup/view
+            "value": [10.0] * n_ev,                     # constant
+            "props": ['{"k": 1}'] * n_ev})
     text = "alpha alpha alpha"
-    write("documents",
-          {"doc_id": [1, 2], "text": [text, text],     # identical docs
-           "lang": ["en", "en"], "source": ["src0", "src0"],
-           "n_chars": [len(text)] * 2},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    _write(FIX, "documents",
+           {"doc_id": [1, 2], "text": [text, text],     # identical docs
+            "lang": ["en", "en"], "source": ["src0", "src0"],
+            "n_chars": [len(text)] * 2})
     dim = 64
-    write("embeddings",
-          {"vec_id": [1, 2], "embedding": [[0.0] * dim, [0.5] * dim],  # zero norm
-           "label": [0, 0]},
-          [("vec_id", pa.int64()),
-           ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    _write(FIX, "embeddings",
+           {"vec_id": [1, 2], "embedding": [[0.0] * dim, [0.5] * dim],  # zero norm
+            "label": [0, 0]})
     return FIX
 
 
 EMPTY_FIX = "/tmp/carpet_empty_fixture"
 _SRC_SF = "/root/testdata/sf0.001"  # schema donor for the 0-row tables
+_TABLES = ("region nation customer supplier part orders lineitem "
+           "events documents embeddings").split()
 
 
 def build_empty_fixture() -> str:
@@ -147,13 +132,8 @@ def build_empty_fixture() -> str:
     sf0.001 parquet footers).  The regime beyond degenerate: at 100 TB an
     empty date-slice / partition / tenant is routine, and driver-side
     `first()[0]` / `collect()[0]` / numpy-on-empty patterns crash on it."""
-    os.makedirs(EMPTY_FIX, exist_ok=True)
-    for t in ("region nation customer supplier part orders lineitem "
-              "events documents embeddings").split():
-        schema = pq.read_schema(f"{_SRC_SF}/{t}.parquet")
-        tmp = f"{EMPTY_FIX}/.{t}.parquet.tmp.{os.getpid()}"
-        pq.write_table(schema.empty_table(), tmp)
-        os.replace(tmp, f"{EMPTY_FIX}/{t}.parquet")
+    for t in _TABLES:
+        _write(EMPTY_FIX, t, pq.read_schema(f"{_SRC_SF}/{t}.parquet").empty_table())
     return EMPTY_FIX
 
 
@@ -166,78 +146,41 @@ def build_single_fixture() -> str:
     sample-variance denominator, makes every LAG/LEAD NULL, collapses
     every window partition to a single row, and gives OLS/correlation
     exactly one point — branches the 6-row flat fixture never reaches."""
-    import pyarrow as pa
-
-    os.makedirs(SINGLE_FIX, exist_ok=True)
     D = dt.datetime(1996, 6, 15)
     E = dt.datetime(2024, 1, 5, 12, 0, 0)
 
-    def write(name, cols, schema):
-        tmp = f"{SINGLE_FIX}/.{name}.parquet.tmp.{os.getpid()}"
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), tmp)
-        os.replace(tmp, f"{SINGLE_FIX}/{name}.parquet")
-
-    write("region", {"r_regionkey": [0], "r_name": ["AMERICA"]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": [0], "n_name": ["BRAZIL"], "n_regionkey": [0]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
-    write("customer",
-          {"c_custkey": [1], "c_name": ["Customer#1"], "c_nationkey": [0],
-           "c_acctbal": [100.0], "c_mktsegment": ["BUILDING"]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
-    write("supplier",
-          {"s_suppkey": [1], "s_name": ["Supplier#1"], "s_nationkey": [0],
-           "s_acctbal": [50.0]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
-    write("part",
-          {"p_partkey": [1], "p_name": ["green part"],
-           "p_brand": ["Brand#11"], "p_type": ["ECONOMY BRASS"],
-           "p_size": [10], "p_retailprice": [900.0]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
-    write("orders",
-          {"o_orderkey": [1], "o_custkey": [1], "o_orderstatus": ["F"],
-           "o_totalprice": [1000.0], "o_orderdate": [D],
-           "o_orderpriority": ["3-MEDIUM"]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")),
-           ("o_orderpriority", pa.string())])
-    write("lineitem",
-          {"l_orderkey": [1], "l_partkey": [1], "l_suppkey": [1],
-           "l_linenumber": [1], "l_quantity": [5.0],
-           "l_extendedprice": [500.0], "l_discount": [0.0], "l_tax": [0.0],
-           "l_returnflag": ["N"], "l_linestatus": ["O"], "l_shipdate": [D]},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
-    write("events",
-          {"event_id": [1], "ts": [E], "user_id": [7],
-           "event_type": ["click"], "value": [10.0],
-           "props": ['{"k": 1}']},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    _write(SINGLE_FIX, "region", {"r_regionkey": [0], "r_name": ["AMERICA"]})
+    _write(SINGLE_FIX, "nation",
+           {"n_nationkey": [0], "n_name": ["BRAZIL"], "n_regionkey": [0]})
+    _write(SINGLE_FIX, "customer",
+           {"c_custkey": [1], "c_name": ["Customer#1"], "c_nationkey": [0],
+            "c_acctbal": [100.0], "c_mktsegment": ["BUILDING"]})
+    _write(SINGLE_FIX, "supplier",
+           {"s_suppkey": [1], "s_name": ["Supplier#1"], "s_nationkey": [0],
+            "s_acctbal": [50.0]})
+    _write(SINGLE_FIX, "part",
+           {"p_partkey": [1], "p_name": ["green part"],
+            "p_brand": ["Brand#11"], "p_type": ["ECONOMY BRASS"],
+            "p_size": [10], "p_retailprice": [900.0]})
+    _write(SINGLE_FIX, "orders",
+           {"o_orderkey": [1], "o_custkey": [1], "o_orderstatus": ["F"],
+            "o_totalprice": [1000.0], "o_orderdate": [D],
+            "o_orderpriority": ["3-MEDIUM"]})
+    _write(SINGLE_FIX, "lineitem",
+           {"l_orderkey": [1], "l_partkey": [1], "l_suppkey": [1],
+            "l_linenumber": [1], "l_quantity": [5.0],
+            "l_extendedprice": [500.0], "l_discount": [0.0], "l_tax": [0.0],
+            "l_returnflag": ["N"], "l_linestatus": ["O"], "l_shipdate": [D]})
+    _write(SINGLE_FIX, "events",
+           {"event_id": [1], "ts": [E], "user_id": [7],
+            "event_type": ["click"], "value": [10.0],
+            "props": ['{"k": 1}']})
     text = "alpha beta gamma"
-    write("documents",
-          {"doc_id": [1], "text": [text], "lang": ["en"],
-           "source": ["src0"], "n_chars": [len(text)]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
-    write("embeddings",
-          {"vec_id": [1], "embedding": [[0.5] * 64], "label": [0]},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    _write(SINGLE_FIX, "documents",
+           {"doc_id": [1], "text": [text], "lang": ["en"],
+            "source": ["src0"], "n_chars": [len(text)]})
+    _write(SINGLE_FIX, "embeddings",
+           {"vec_id": [1], "embedding": [[0.5] * 64], "label": [0]})
     return SINGLE_FIX
 
 
@@ -254,80 +197,53 @@ def build_nulls_fixture() -> str:
     DuckDB concat (DuckDB skips NULLs, Spark propagates), greatest/least,
     and ASC NULL ordering (Spark NULLS FIRST vs DuckDB NULLS LAST) in
     window/topk ops."""
-    os.makedirs(NULLS_FIX, exist_ok=True)
     D = dt.datetime(1996, 6, 15)
     E = dt.datetime(2024, 1, 5, 12, 0, 0)
 
-    def write(name, cols, schema):
-        tmp = f"{NULLS_FIX}/.{name}.parquet.tmp.{os.getpid()}"
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), tmp)
-        os.replace(tmp, f"{NULLS_FIX}/{name}.parquet")
-
-    write("region", {"r_regionkey": [0, 1], "r_name": ["AMERICA", "ASIA"]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": [0, 1], "n_name": ["BRAZIL", "CHINA"],
-           "n_regionkey": [0, 1]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
-    write("customer",
-          {"c_custkey": [1, 2, 3, 4],
-           "c_name": ["Customer#1", None, "Customer#3", "Customer#4"],
-           "c_nationkey": [0, 0, 1, 1],
-           "c_acctbal": [100.0, None, 250.0, None],
-           "c_mktsegment": ["BUILDING", "BUILDING", None, "MACHINERY"]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
-    write("supplier",
-          {"s_suppkey": [1, 2], "s_name": ["Supplier#1", "Supplier#2"],
-           "s_nationkey": [0, 1], "s_acctbal": [50.0, None]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
-    write("part",
-          {"p_partkey": [1, 2, 3],
-           "p_name": ["green part", None, "red part"],
-           "p_brand": ["Brand#11", "Brand#12", "Brand#11"],
-           "p_type": ["ECONOMY BRASS", "PROMO STEEL", None],
-           "p_size": [10, None, 20],
-           "p_retailprice": [900.0, 800.0, None]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
+    _write(NULLS_FIX, "region", {"r_regionkey": [0, 1], "r_name": ["AMERICA", "ASIA"]})
+    _write(NULLS_FIX, "nation",
+           {"n_nationkey": [0, 1], "n_name": ["BRAZIL", "CHINA"],
+            "n_regionkey": [0, 1]})
+    _write(NULLS_FIX, "customer",
+           {"c_custkey": [1, 2, 3, 4],
+            "c_name": ["Customer#1", None, "Customer#3", "Customer#4"],
+            "c_nationkey": [0, 0, 1, 1],
+            "c_acctbal": [100.0, None, 250.0, None],
+            "c_mktsegment": ["BUILDING", "BUILDING", None, "MACHINERY"]})
+    _write(NULLS_FIX, "supplier",
+           {"s_suppkey": [1, 2], "s_name": ["Supplier#1", "Supplier#2"],
+            "s_nationkey": [0, 1], "s_acctbal": [50.0, None]})
+    _write(NULLS_FIX, "part",
+           {"p_partkey": [1, 2, 3],
+            "p_name": ["green part", None, "red part"],
+            "p_brand": ["Brand#11", "Brand#12", "Brand#11"],
+            "p_type": ["ECONOMY BRASS", "PROMO STEEL", None],
+            "p_size": [10, None, 20],
+            "p_retailprice": [900.0, 800.0, None]})
     n_o = 8
-    write("orders",
-          {"o_orderkey": list(range(1, n_o + 1)),
-           "o_custkey": [1, 1, 2, 2, 3, 3, 4, 4],
-           "o_orderstatus": ["F", "O", "F", "O", "F", "O", "F", "O"],
-           "o_totalprice": [1000.0, None, 1200.0, 800.0,
-                            None, 1500.0, 900.0, 1100.0],
-           "o_orderdate": [D + dt.timedelta(days=k) for k in range(n_o)],
-           "o_orderpriority": ["3-MEDIUM", "1-URGENT", None, "3-MEDIUM",
-                               "2-HIGH", None, "1-URGENT", "3-MEDIUM"]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")),
-           ("o_orderpriority", pa.string())])
+    _write(NULLS_FIX, "orders",
+           {"o_orderkey": list(range(1, n_o + 1)),
+            "o_custkey": [1, 1, 2, 2, 3, 3, 4, 4],
+            "o_orderstatus": ["F", "O", "F", "O", "F", "O", "F", "O"],
+            "o_totalprice": [1000.0, None, 1200.0, 800.0,
+                             None, 1500.0, 900.0, 1100.0],
+            "o_orderdate": [D + dt.timedelta(days=k) for k in range(n_o)],
+            "o_orderpriority": ["3-MEDIUM", "1-URGENT", None, "3-MEDIUM",
+                                "2-HIGH", None, "1-URGENT", "3-MEDIUM"]})
     n_li = 10
-    write("lineitem",
-          {"l_orderkey": [1, 1, 2, 3, 4, 5, 6, 7, 8, 8],
-           "l_partkey": [1, 2, 1, 2, 3, 3, 1, 2, 3, 1],
-           "l_suppkey": [1, 2, 1, 2, 1, 2, 1, 2, 1, 2],
-           "l_linenumber": [1, 2, 1, 1, 1, 1, 1, 1, 1, 2],
-           "l_quantity": [5.0, None, 3.0, 7.0, None, 2.0, 4.0, 6.0, 1.0, 8.0],
-           "l_extendedprice": [500.0, 300.0, None, 700.0, 200.0,
-                               None, 400.0, 600.0, 100.0, 800.0],
-           "l_discount": [0.05, 0.0, 0.1, None, 0.02, 0.0, 0.07, None, 0.0, 0.04],
-           "l_tax": [0.02, None, 0.0, 0.03, 0.0, 0.01, None, 0.02, 0.0, 0.05],
-           "l_returnflag": ["N", "N", "A", None, "R", "N", "A", "R", "N", None],
-           "l_linestatus": ["O", "F", "O", "F", "O", "F", "O", "F", "O", "F"],
-           "l_shipdate": [D + dt.timedelta(days=k) for k in range(n_li)]},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    _write(NULLS_FIX, "lineitem",
+           {"l_orderkey": [1, 1, 2, 3, 4, 5, 6, 7, 8, 8],
+            "l_partkey": [1, 2, 1, 2, 3, 3, 1, 2, 3, 1],
+            "l_suppkey": [1, 2, 1, 2, 1, 2, 1, 2, 1, 2],
+            "l_linenumber": [1, 2, 1, 1, 1, 1, 1, 1, 1, 2],
+            "l_quantity": [5.0, None, 3.0, 7.0, None, 2.0, 4.0, 6.0, 1.0, 8.0],
+            "l_extendedprice": [500.0, 300.0, None, 700.0, 200.0,
+                                None, 400.0, 600.0, 100.0, 800.0],
+            "l_discount": [0.05, 0.0, 0.1, None, 0.02, 0.0, 0.07, None, 0.0, 0.04],
+            "l_tax": [0.02, None, 0.0, 0.03, 0.0, 0.01, None, 0.02, 0.0, 0.05],
+            "l_returnflag": ["N", "N", "A", None, "R", "N", "A", "R", "N", None],
+            "l_linestatus": ["O", "F", "O", "F", "O", "F", "O", "F", "O", "F"],
+            "l_shipdate": [D + dt.timedelta(days=k) for k in range(n_li)]})
     # Multi-DAY event axis with NULL-closing days (r6 ADVICE): days 1 and
     # 2 END on a NULL value (the arg_max-skips-NULLs vs max_by-unmasked-key
     # divergence only fires when a day's LAST tick is NULL), day 3 closes
@@ -338,48 +254,40 @@ def build_nulls_fixture() -> str:
            E + dt.timedelta(days=1, hours=2),
            E + dt.timedelta(days=2), E + dt.timedelta(days=2, hours=1),
            E + dt.timedelta(days=3), E + dt.timedelta(days=3, hours=1)]
-    write("events",
-          {"event_id": list(range(1, n_ev + 1)),
-           "ts": EVT,
-           "user_id": [7, 7, 8, 8, 9, 9, 7, 8, 9, 7],
-           # index 5 is a PURCHASE with a NULL value: day 2 then holds a
-           # purchase whose values MIX non-NULL (50.0) and NULL inside
-           # one (type, day) group — the divisor trap COUNT(*) vs
-           # COUNT(value) that AVG-skipping oracles catch (found live in
-           # ts_twap_daily's split-sum rewrite, r9); day 2 still ENDS on
-           # a NULL tick, preserving the arg_max contract below
-           "event_type": ["click", "view", None, "click",
-                          "purchase", "purchase", "view", "click", "view", None],
-           "value": [10.0, 30.0, None,          # day 1: last tick NULL
-                     None, 50.0, None,          # day 2: last tick NULL
-                     None, 40.0,                # day 3: closes non-NULL
-                     None, None],               # day 4: all NULL
-           "props": ['{"k": 1}', None, '{"k": 3}', '{"k": 4}',
-                     None, '{"k": 6}', '{"k": 7}', None, '{"k": 9}', None]},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    _write(NULLS_FIX, "events",
+           {"event_id": list(range(1, n_ev + 1)),
+            "ts": EVT,
+            "user_id": [7, 7, 8, 8, 9, 9, 7, 8, 9, 7],
+            # index 5 is a PURCHASE with a NULL value: day 2 then holds a
+            # purchase whose values MIX non-NULL (50.0) and NULL inside
+            # one (type, day) group — the divisor trap COUNT(*) vs
+            # COUNT(value) that AVG-skipping oracles catch (found live in
+            # ts_twap_daily's split-sum rewrite, r9); day 2 still ENDS on
+            # a NULL tick, preserving the arg_max contract below
+            "event_type": ["click", "view", None, "click",
+                           "purchase", "purchase", "view", "click", "view", None],
+            "value": [10.0, 30.0, None,          # day 1: last tick NULL
+                      None, 50.0, None,          # day 2: last tick NULL
+                      None, 40.0,                # day 3: closes non-NULL
+                      None, None],               # day 4: all NULL
+            "props": ['{"k": 1}', None, '{"k": 3}', '{"k": 4}',
+                      None, '{"k": 6}', '{"k": 7}', None, '{"k": 9}', None]})
     t1, t3 = "alpha beta gamma", "delta epsilon"
     # doc 4 has text but a NULL n_chars: the lang='en' group then MIXES
     # NULL and non-NULL n_chars, exposing COUNT(*)-vs-COUNT(col) divisor
     # bugs in per-lang score/length aggregates (same trap as events)
-    write("documents",
-          {"doc_id": [1, 2, 3, 4],
-           "text": [t1, None, t3, t1],
-           "lang": ["en", "de", None, "en"],
-           "source": ["src0", "src1", "src0", "src1"],
-           "n_chars": [len(t1), None, len(t3), None]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    _write(NULLS_FIX, "documents",
+           {"doc_id": [1, 2, 3, 4],
+            "text": [t1, None, t3, t1],
+            "lang": ["en", "de", None, "en"],
+            "source": ["src0", "src1", "src0", "src1"],
+            "n_chars": [len(t1), None, len(t3), None]})
     dim = 64
-    write("embeddings",
-          {"vec_id": [0, 1, 2, 3],
-           "embedding": [[0.5] * dim, None, [0.25] * dim,
-                         [v / 100.0 for v in range(dim)]],
-           "label": [0, 1, None, 0]},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    _write(NULLS_FIX, "embeddings",
+           {"vec_id": [0, 1, 2, 3],
+            "embedding": [[0.5] * dim, None, [0.25] * dim,
+                          [v / 100.0 for v in range(dim)]],
+            "label": [0, 1, None, 0]})
     return NULLS_FIX
 
 
@@ -406,97 +314,68 @@ def build_extreme_fixture() -> str:
     sequence, CJK, a combining-accent cluster, an RTL word, and a ~40 kB
     document — the length()/substr()/regex semantics probe (code points
     vs graphemes vs bytes) plus a token-pipeline stressor."""
-    os.makedirs(EXTREME_FIX, exist_ok=True)
     D = dt.datetime(1996, 6, 15)
     E = dt.datetime(2024, 1, 5, 12, 0, 0)
 
-    def write(name, cols, schema):
-        tmp = f"{EXTREME_FIX}/.{name}.parquet.tmp.{os.getpid()}"
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), tmp)
-        os.replace(tmp, f"{EXTREME_FIX}/{name}.parquet")
-
-    write("region", {"r_regionkey": [0, 1], "r_name": ["AMERICA", "ASIA"]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": [0, 1], "n_name": ["BRAZIL", "CHINA"],
-           "n_regionkey": [0, 1]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
-    write("customer",
-          {"c_custkey": [1, 2, 3, 4],
-           "c_name": ["Customer#1", "Customer#2", "Customer#3", "Customer#4"],
-           "c_nationkey": [0, 0, 1, 1],
-           "c_acctbal": [1.0e10, -2.5e9, 5.0e9, 0.25],
-           "c_mktsegment": ["BUILDING", "BUILDING", "MACHINERY", "MACHINERY"]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
-    write("supplier",
-          {"s_suppkey": [1, 2], "s_name": ["Supplier#1", "Supplier#2"],
-           "s_nationkey": [0, 1], "s_acctbal": [7.5e9, -1.25e9]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
-    write("part",
-          {"p_partkey": [1, 2, 3],
-           "p_name": ["green part", "red part", "blue part"],
-           "p_brand": ["Brand#11", "Brand#12", "Brand#11"],
-           "p_type": ["ECONOMY BRASS", "PROMO STEEL", "STANDARD TIN"],
-           "p_size": [10, 2000000000, 20],
-           "p_retailprice": [9.0e9, 800.0, 0.5]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
+    _write(EXTREME_FIX, "region",
+           {"r_regionkey": [0, 1], "r_name": ["AMERICA", "ASIA"]})
+    _write(EXTREME_FIX, "nation",
+           {"n_nationkey": [0, 1], "n_name": ["BRAZIL", "CHINA"],
+            "n_regionkey": [0, 1]})
+    _write(EXTREME_FIX, "customer",
+           {"c_custkey": [1, 2, 3, 4],
+            "c_name": ["Customer#1", "Customer#2", "Customer#3", "Customer#4"],
+            "c_nationkey": [0, 0, 1, 1],
+            "c_acctbal": [1.0e10, -2.5e9, 5.0e9, 0.25],
+            "c_mktsegment": ["BUILDING", "BUILDING", "MACHINERY", "MACHINERY"]})
+    _write(EXTREME_FIX, "supplier",
+           {"s_suppkey": [1, 2], "s_name": ["Supplier#1", "Supplier#2"],
+            "s_nationkey": [0, 1], "s_acctbal": [7.5e9, -1.25e9]})
+    _write(EXTREME_FIX, "part",
+           {"p_partkey": [1, 2, 3],
+            "p_name": ["green part", "red part", "blue part"],
+            "p_brand": ["Brand#11", "Brand#12", "Brand#11"],
+            "p_type": ["ECONOMY BRASS", "PROMO STEEL", "STANDARD TIN"],
+            "p_size": [10, 2000000000, 20],
+            "p_retailprice": [9.0e9, 800.0, 0.5]})
     n_o = 8
-    write("orders",
-          {"o_orderkey": list(range(1, n_o + 1)),
-           "o_custkey": [1, 1, 2, 2, 3, 3, 4, 4],
-           "o_orderstatus": ["F", "O", "F", "O", "F", "O", "F", "O"],
-           "o_totalprice": [1.0e10, 2.5e10, 5.0e9, -7.5e9,
-                            1.25e10, 3.0e10, 0.25, 4.5e10],
-           "o_orderdate": [D + dt.timedelta(days=k) for k in range(n_o)],
-           "o_orderpriority": ["3-MEDIUM", "1-URGENT", "2-HIGH", "3-MEDIUM",
-                               "2-HIGH", "1-URGENT", "1-URGENT", "3-MEDIUM"]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")),
-           ("o_orderpriority", pa.string())])
+    _write(EXTREME_FIX, "orders",
+           {"o_orderkey": list(range(1, n_o + 1)),
+            "o_custkey": [1, 1, 2, 2, 3, 3, 4, 4],
+            "o_orderstatus": ["F", "O", "F", "O", "F", "O", "F", "O"],
+            "o_totalprice": [1.0e10, 2.5e10, 5.0e9, -7.5e9,
+                             1.25e10, 3.0e10, 0.25, 4.5e10],
+            "o_orderdate": [D + dt.timedelta(days=k) for k in range(n_o)],
+            "o_orderpriority": ["3-MEDIUM", "1-URGENT", "2-HIGH", "3-MEDIUM",
+                                "2-HIGH", "1-URGENT", "1-URGENT", "3-MEDIUM"]})
     n_li = 10
-    write("lineitem",
-          {"l_orderkey": [1, 1, 2, 3, 4, 5, 6, 7, 8, 8],
-           "l_partkey": [1, 2, 1, 2, 3, 3, 1, 2, 3, 1],
-           "l_suppkey": [1, 2, 1, 2, 1, 2, 1, 2, 1, 2],
-           "l_linenumber": [1, 2, 1, 1, 1, 1, 1, 1, 1, 2],
-           "l_quantity": [50000.0, 25000.0, 10000.0, 75000.0, 5000.0,
-                          60000.0, 40000.0, 30000.0, 1.0, 80000.0],
-           "l_extendedprice": [5.0e9, 2.5e9, 7.5e9, 1.0e10, 2.0e9,
-                               -3.0e9, 4.0e9, 6.0e9, 0.5, 8.0e9],
-           "l_discount": [0.05, 0.0, 0.1, 0.25, 0.02,
-                          0.0, 0.07, 0.5, 0.0, 0.04],
-           "l_tax": [0.02, 0.0, 0.0, 0.03, 0.0, 0.01, 0.05, 0.02, 0.0, 0.05],
-           "l_returnflag": ["N", "N", "A", "R", "R", "N", "A", "R", "N", "A"],
-           "l_linestatus": ["O", "F", "O", "F", "O", "F", "O", "F", "O", "F"],
-           "l_shipdate": [D + dt.timedelta(days=k) for k in range(n_li)]},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    _write(EXTREME_FIX, "lineitem",
+           {"l_orderkey": [1, 1, 2, 3, 4, 5, 6, 7, 8, 8],
+            "l_partkey": [1, 2, 1, 2, 3, 3, 1, 2, 3, 1],
+            "l_suppkey": [1, 2, 1, 2, 1, 2, 1, 2, 1, 2],
+            "l_linenumber": [1, 2, 1, 1, 1, 1, 1, 1, 1, 2],
+            "l_quantity": [50000.0, 25000.0, 10000.0, 75000.0, 5000.0,
+                           60000.0, 40000.0, 30000.0, 1.0, 80000.0],
+            "l_extendedprice": [5.0e9, 2.5e9, 7.5e9, 1.0e10, 2.0e9,
+                                -3.0e9, 4.0e9, 6.0e9, 0.5, 8.0e9],
+            "l_discount": [0.05, 0.0, 0.1, 0.25, 0.02,
+                           0.0, 0.07, 0.5, 0.0, 0.04],
+            "l_tax": [0.02, 0.0, 0.0, 0.03, 0.0, 0.01, 0.05, 0.02, 0.0, 0.05],
+            "l_returnflag": ["N", "N", "A", "R", "R", "N", "A", "R", "N", "A"],
+            "l_linestatus": ["O", "F", "O", "F", "O", "F", "O", "F", "O", "F"],
+            "l_shipdate": [D + dt.timedelta(days=k) for k in range(n_li)]})
     n_ev = 8
-    write("events",
-          {"event_id": list(range(1, n_ev + 1)),
-           "ts": [E + dt.timedelta(minutes=17 * k) for k in range(n_ev)],
-           "user_id": [7, 7, 8, 8, 9, 9, 7, 8],
-           "event_type": ["click", "view", "purchase", "click",
-                          "purchase", "error", "view", "click"],
-           "value": [1.0e9, 2.5e9, 5.0e8, -7.5e8,
-                     1.25e9, 3.0e9, 0.25, 4.5e9],
-           "props": ['{"k": 9007199254740993}', '{"k": 2}', '{"k": 3}',
-                     '{"k": -9007199254740993}', '{"k": 5}', '{"k": 6}',
-                     '{"k": 7}', '{"k": 8}']},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    _write(EXTREME_FIX, "events",
+           {"event_id": list(range(1, n_ev + 1)),
+            "ts": [E + dt.timedelta(minutes=17 * k) for k in range(n_ev)],
+            "user_id": [7, 7, 8, 8, 9, 9, 7, 8],
+            "event_type": ["click", "view", "purchase", "click",
+                           "purchase", "error", "view", "click"],
+            "value": [1.0e9, 2.5e9, 5.0e8, -7.5e8,
+                      1.25e9, 3.0e9, 0.25, 4.5e9],
+            "props": ['{"k": 9007199254740993}', '{"k": 2}', '{"k": 3}',
+                      '{"k": -9007199254740993}', '{"k": 5}', '{"k": 6}',
+                      '{"k": 7}', '{"k": 8}']})
     t_emoji = ("family \U0001F468‍\U0001F469‍\U0001F467 emoji "
                "\U0001F600 test")  # ZWJ family sequence + 4-byte emoji
     t_cjk = "数据 处理 引擎 测试 pipeline"
@@ -504,24 +383,19 @@ def build_extreme_fixture() -> str:
     t_rtl = "hello שלום world مرحبا end"
     t_long = ("alpha beta gamma delta epsilon zeta eta theta " * 1000).strip()
     texts = [t_emoji, t_cjk, t_combining, t_rtl, t_long]
-    write("documents",
-          {"doc_id": [1, 2, 3, 4, 5],
-           "text": texts,
-           "lang": ["en", "zh", "fr", "he", "en"],
-           "source": ["src0", "src1", "src0", "src1", "src0"],
-           "n_chars": [len(t) for t in texts]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    _write(EXTREME_FIX, "documents",
+           {"doc_id": [1, 2, 3, 4, 5],
+            "text": texts,
+            "lang": ["en", "zh", "fr", "he", "en"],
+            "source": ["src0", "src1", "src0", "src1", "src0"],
+            "n_chars": [len(t) for t in texts]})
     dim = 64
-    write("embeddings",
-          {"vec_id": [0, 1, 2, 3],
-           "embedding": [[1.0e6] * dim, [-5.0e5] * dim,
-                         [2.5e5 * ((-1) ** v) for v in range(dim)],
-                         [float(v) * 1.0e4 for v in range(dim)]],
-           "label": [0, 1, 0, 1]},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    _write(EXTREME_FIX, "embeddings",
+           {"vec_id": [0, 1, 2, 3],
+            "embedding": [[1.0e6] * dim, [-5.0e5] * dim,
+                          [2.5e5 * ((-1) ** v) for v in range(dim)],
+                          [float(v) * 1.0e4 for v in range(dim)]],
+            "label": [0, 1, 0, 1]})
     return EXTREME_FIX
 
 
@@ -540,16 +414,10 @@ def build_shuffled_fixture() -> str:
     inside the op itself can diverge the hash."""
     import numpy as np
 
-    os.makedirs(SHUFFLED_FIX, exist_ok=True)
-    for i, t in enumerate(
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings".split()
-    ):
+    for i, t in enumerate(_TABLES):
         tbl = pq.read_table(f"{_SRC_SF}/{t}.parquet")
         perm = np.random.default_rng(1000 + i).permutation(tbl.num_rows)
-        tmp = f"{SHUFFLED_FIX}/.{t}.parquet.tmp.{os.getpid()}"
-        pq.write_table(tbl.take(perm), tmp)
-        os.replace(tmp, f"{SHUFFLED_FIX}/{t}.parquet")
+        _write(SHUFFLED_FIX, t, tbl.take(perm))
     return SHUFFLED_FIX
 
 
@@ -576,66 +444,46 @@ def build_boundary_fixture() -> str:
     30000); acctbal exactly 0; identical documents and a text whose
     length sits on prefix cuts; identical embeddings (cos exactly 1)
     and orthogonal ones (cos exactly 0)."""
-    os.makedirs(BOUNDARY_FIX, exist_ok=True)
     E = dt.datetime(2024, 1, 5, 12, 0, 0)
 
-    def write(name, cols, schema):
-        tmp = f"{BOUNDARY_FIX}/.{name}.parquet.tmp.{os.getpid()}"
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), tmp)
-        os.replace(tmp, f"{BOUNDARY_FIX}/{name}.parquet")
-
-    write("region", {"r_regionkey": [0, 1], "r_name": ["AMERICA", "ASIA"]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": [0, 1], "n_name": ["BRAZIL", "CHINA"],
-           "n_regionkey": [0, 1]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
-    write("customer",
-          {"c_custkey": [1, 2, 3, 4],
-           "c_name": ["Customer#1", "Customer#2", "Customer#3", "Customer#4"],
-           "c_nationkey": [0, 0, 1, 1],
-           "c_acctbal": [0.0, 100.0, -100.0, 0.0],
-           "c_mktsegment": ["BUILDING", "BUILDING", "MACHINERY", "AUTOMOBILE"]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
-    write("supplier",
-          {"s_suppkey": [1, 2], "s_name": ["Supplier#1", "Supplier#2"],
-           "s_nationkey": [0, 1], "s_acctbal": [0.0, 50.0]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
-    write("part",
-          {"p_partkey": [1, 2, 3],
-           "p_name": ["green part", "red part", "blue part"],
-           "p_brand": ["Brand#11", "Brand#12", "Brand#11"],
-           "p_type": ["ECONOMY BRASS", "PROMO STEEL", "STANDARD TIN"],
-           "p_size": [1, 10, 50],
-           "p_retailprice": [900.0, 900.0, 30000.0]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
+    _write(BOUNDARY_FIX, "region",
+           {"r_regionkey": [0, 1], "r_name": ["AMERICA", "ASIA"]})
+    _write(BOUNDARY_FIX, "nation",
+           {"n_nationkey": [0, 1], "n_name": ["BRAZIL", "CHINA"],
+            "n_regionkey": [0, 1]})
+    _write(BOUNDARY_FIX, "customer",
+           {"c_custkey": [1, 2, 3, 4],
+            "c_name": ["Customer#1", "Customer#2", "Customer#3", "Customer#4"],
+            "c_nationkey": [0, 0, 1, 1],
+            "c_acctbal": [0.0, 100.0, -100.0, 0.0],
+            "c_mktsegment": ["BUILDING", "BUILDING", "MACHINERY", "AUTOMOBILE"]})
+    _write(BOUNDARY_FIX, "supplier",
+           {"s_suppkey": [1, 2], "s_name": ["Supplier#1", "Supplier#2"],
+            "s_nationkey": [0, 1], "s_acctbal": [0.0, 50.0]})
+    _write(BOUNDARY_FIX, "part",
+           {"p_partkey": [1, 2, 3],
+            "p_name": ["green part", "red part", "blue part"],
+            "p_brand": ["Brand#11", "Brand#12", "Brand#11"],
+            "p_type": ["ECONOMY BRASS", "PROMO STEEL", "STANDARD TIN"],
+            "p_size": [1, 10, 50],
+            "p_retailprice": [900.0, 900.0, 30000.0]})
     # order dates: exactly on the q1/q6-style cut dates + one pair sharing
     # a date (tie) — all within the TPC-H era every op assumes
     OD = [dt.datetime(1997, 1, 1), dt.datetime(1997, 12, 31),
           dt.datetime(1998, 9, 2), dt.datetime(1997, 6, 15),
           dt.datetime(1997, 6, 15), dt.datetime(1998, 1, 1),
           dt.datetime(1997, 3, 31), dt.datetime(1997, 10, 1)]
-    write("orders",
-          {"o_orderkey": list(range(1, 9)),
-           "o_custkey": [1, 1, 2, 2, 3, 3, 4, 4],
-           "o_orderstatus": ["F", "O", "F", "O", "F", "O", "F", "O"],
-           # exactly on the big/mid tier cuts (200000 / 100000), equal
-           # pair (rank tie), and a zero
-           "o_totalprice": [200000.0, 100000.0, 200000.0, 0.0,
-                            150000.0, 150000.0, 100000.0, 250000.0],
-           "o_orderdate": OD,
-           "o_orderpriority": ["1-URGENT", "2-HIGH", "3-MEDIUM", "1-URGENT",
-                               "2-HIGH", "3-MEDIUM", "1-URGENT", "2-HIGH"]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")),
-           ("o_orderpriority", pa.string())])
+    _write(BOUNDARY_FIX, "orders",
+           {"o_orderkey": list(range(1, 9)),
+            "o_custkey": [1, 1, 2, 2, 3, 3, 4, 4],
+            "o_orderstatus": ["F", "O", "F", "O", "F", "O", "F", "O"],
+            # exactly on the big/mid tier cuts (200000 / 100000), equal
+            # pair (rank tie), and a zero
+            "o_totalprice": [200000.0, 100000.0, 200000.0, 0.0,
+                             150000.0, 150000.0, 100000.0, 250000.0],
+            "o_orderdate": OD,
+            "o_orderpriority": ["1-URGENT", "2-HIGH", "3-MEDIUM", "1-URGENT",
+                                "2-HIGH", "3-MEDIUM", "1-URGENT", "2-HIGH"]})
     # lineitem: shipdates ON the filter cuts and EQUAL to the parent
     # order's date (ship-before-order equality case)
     LSD = [dt.datetime(1997, 1, 1), dt.datetime(1997, 12, 31),
@@ -643,30 +491,24 @@ def build_boundary_fixture() -> str:
            dt.datetime(1997, 6, 15), dt.datetime(1998, 1, 1),
            dt.datetime(1997, 3, 31), dt.datetime(1997, 10, 1),
            dt.datetime(1997, 1, 1), dt.datetime(1997, 12, 31)]
-    write("lineitem",
-          {"l_orderkey": [1, 1, 2, 3, 4, 5, 6, 7, 8, 8],
-           "l_partkey": [1, 2, 1, 2, 3, 3, 1, 2, 3, 1],
-           "l_suppkey": [1, 2, 1, 2, 1, 2, 1, 2, 1, 2],
-           "l_linenumber": [1, 2, 1, 1, 1, 1, 1, 1, 1, 2],
-           # exactly the isin(1, 25, 50) members and the >= 48 cut
-           "l_quantity": [1.0, 25.0, 50.0, 48.0, 2.0, 25.0, 1.0, 50.0,
-                          48.0, 24.0],
-           # histogram-edge multiples of 30000 and an exact duplicate pair
-           "l_extendedprice": [30000.0, 60000.0, 30000.0, 90000.0, 500.0,
-                               60000.0, 30000.0, 120000.0, 90000.0, 500.0],
-           # exactly on the 0.05 / 0.09 / 0.5 cuts and 0
-           "l_discount": [0.05, 0.09, 0.5, 0.0, 0.05, 0.09, 0.0, 0.5,
-                          0.05, 0.0],
-           "l_tax": [0.0, 0.02, 0.0, 0.05, 0.0, 0.02, 0.0, 0.05, 0.0, 0.0],
-           "l_returnflag": ["N", "A", "R", "N", "A", "R", "N", "A", "R", "N"],
-           "l_linestatus": ["O", "F", "O", "F", "O", "F", "O", "F", "O", "F"],
-           "l_shipdate": LSD},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    _write(BOUNDARY_FIX, "lineitem",
+           {"l_orderkey": [1, 1, 2, 3, 4, 5, 6, 7, 8, 8],
+            "l_partkey": [1, 2, 1, 2, 3, 3, 1, 2, 3, 1],
+            "l_suppkey": [1, 2, 1, 2, 1, 2, 1, 2, 1, 2],
+            "l_linenumber": [1, 2, 1, 1, 1, 1, 1, 1, 1, 2],
+            # exactly the isin(1, 25, 50) members and the >= 48 cut
+            "l_quantity": [1.0, 25.0, 50.0, 48.0, 2.0, 25.0, 1.0, 50.0,
+                           48.0, 24.0],
+            # histogram-edge multiples of 30000 and an exact duplicate pair
+            "l_extendedprice": [30000.0, 60000.0, 30000.0, 90000.0, 500.0,
+                                60000.0, 30000.0, 120000.0, 90000.0, 500.0],
+            # exactly on the 0.05 / 0.09 / 0.5 cuts and 0
+            "l_discount": [0.05, 0.09, 0.5, 0.0, 0.05, 0.09, 0.0, 0.5,
+                           0.05, 0.0],
+            "l_tax": [0.0, 0.02, 0.0, 0.05, 0.0, 0.02, 0.0, 0.05, 0.0, 0.0],
+            "l_returnflag": ["N", "A", "R", "N", "A", "R", "N", "A", "R", "N"],
+            "l_linestatus": ["O", "F", "O", "F", "O", "F", "O", "F", "O", "F"],
+            "l_shipdate": LSD})
     # events: exact hour/15-min window boundaries, an identical-ts tie,
     # a gap of exactly 30 minutes (session_window edge), values exactly
     # on the 60.0 alert and 90.0 conversion thresholds and 0
@@ -678,41 +520,33 @@ def build_boundary_fixture() -> str:
           E + dt.timedelta(hours=1, minutes=30),
           E + dt.timedelta(hours=2),           # another exact boundary
           E + dt.timedelta(hours=2)]           # tie at 14:00
-    write("events",
-          {"event_id": list(range(1, 9)),
-           "ts": TS,
-           "user_id": [7, 7, 7, 7, 8, 8, 9, 9],
-           "event_type": ["click", "view", "purchase", "click",
-                          "purchase", "error", "view", "purchase"],
-           "value": [60.0, 90.0, 90.0, 0.0, 60.0, 90.0, 0.0, 91.0],
-           "props": [f'{{"k": {k}}}' for k in range(1, 9)]},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    _write(BOUNDARY_FIX, "events",
+           {"event_id": list(range(1, 9)),
+            "ts": TS,
+            "user_id": [7, 7, 7, 7, 8, 8, 9, 9],
+            "event_type": ["click", "view", "purchase", "click",
+                           "purchase", "error", "view", "purchase"],
+            "value": [60.0, 90.0, 90.0, 0.0, 60.0, 90.0, 0.0, 91.0],
+            "props": [f'{{"k": {k}}}' for k in range(1, 9)]})
     t1 = "alpha beta gamma delta"        # len 22 (crosses the 20-char blk)
     t2 = "alpha beta gamma delta"        # exact duplicate (dedup boundary)
     t3 = "epsilon zeta"                  # distinct
     t4 = "alpha beta gamma delta extra"  # shared 20-char prefix with t1/t2
-    write("documents",
-          {"doc_id": [1, 2, 3, 4],
-           "text": [t1, t2, t3, t4],
-           "lang": ["en", "en", "de", "en"],
-           "source": ["src0", "src0", "src1", "src1"],
-           "n_chars": [len(t1), len(t2), len(t3), len(t4)]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    _write(BOUNDARY_FIX, "documents",
+           {"doc_id": [1, 2, 3, 4],
+            "text": [t1, t2, t3, t4],
+            "lang": ["en", "en", "de", "en"],
+            "source": ["src0", "src0", "src1", "src1"],
+            "n_chars": [len(t1), len(t2), len(t3), len(t4)]})
     dim = 64
     v_unit = [1.0] + [0.0] * (dim - 1)
     v_orth = [0.0, 1.0] + [0.0] * (dim - 2)   # cos exactly 0 vs v_unit
-    write("embeddings",
-          {"vec_id": [0, 1, 2, 3],
-           # identical pair (cos exactly 1), orthogonal (cos exactly 0)
-           "embedding": [v_unit, v_unit, v_orth,
-                         [0.5] * dim],
-           "label": [0, 0, 1, 1]},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    _write(BOUNDARY_FIX, "embeddings",
+           {"vec_id": [0, 1, 2, 3],
+            # identical pair (cos exactly 1), orthogonal (cos exactly 0)
+            "embedding": [v_unit, v_unit, v_orth,
+                          [0.5] * dim],
+            "label": [0, 0, 1, 1]})
     return BOUNDARY_FIX
 
 
@@ -739,14 +573,8 @@ def build_hostile_fixture() -> str:
     upper()/lower() on non-ASCII, regex/LIKE metacharacter leakage when
     data strings reach pattern positions, and JSON escaping of quotes /
     control chars / astral-plane emoji."""
-    os.makedirs(HOSTILE_FIX, exist_ok=True)
     D = dt.datetime(1996, 6, 15)
     E = dt.datetime(2024, 1, 5, 12, 0, 0)
-
-    def write(name, cols, schema):
-        tmp = f"{HOSTILE_FIX}/.{name}.parquet.tmp.{os.getpid()}"
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), tmp)
-        os.replace(tmp, f"{HOSTILE_FIX}/{name}.parquet")
 
     # the hostile battery — reused across columns so every class appears
     HS = [
@@ -768,76 +596,55 @@ def build_hostile_fixture() -> str:
         "dot.star.*regex",          # regex metacharacters as DATA
     ]
 
-    write("region", {"r_regionkey": [0, 1],
-                     "r_name": ["AMERICA", HS[10]]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": [0, 1, 2],
-           "n_name": ["BRAZIL", HS[11], HS[5]],
-           "n_regionkey": [0, 1, 1]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
+    _write(HOSTILE_FIX, "region", {"r_regionkey": [0, 1],
+                      "r_name": ["AMERICA", HS[10]]})
+    _write(HOSTILE_FIX, "nation",
+           {"n_nationkey": [0, 1, 2],
+            "n_name": ["BRAZIL", HS[11], HS[5]],
+            "n_regionkey": [0, 1, 1]})
     n_c = 8
-    write("customer",
-          {"c_custkey": list(range(1, n_c + 1)),
-           "c_name": HS[:n_c],
-           "c_nationkey": [k % 3 for k in range(n_c)],
-           "c_acctbal": [100.0 + 25.0 * k for k in range(n_c)],
-           # two in-domain segments + hostile extras (else-branch fodder)
-           "c_mktsegment": ["BUILDING", "MACHINERY", HS[0], HS[2],
-                            HS[7], HS[8], HS[12], HS[14]]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
-    write("supplier",
-          {"s_suppkey": [1, 2], "s_name": [HS[1], HS[9]],
-           "s_nationkey": [0, 1], "s_acctbal": [50.0, 75.0]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
-    write("part",
-          {"p_partkey": [1, 2, 3, 4],
-           "p_name": [HS[15], HS[4], "green part", HS[13]],
-           "p_brand": ["Brand#11", HS[8], "Brand#12", HS[6]],
-           "p_type": ["ECONOMY BRASS", HS[3], HS[10], "PROMO STEEL"],
-           "p_size": [10, 20, 30, 40],
-           "p_retailprice": [900.0, 800.0, 700.0, 600.0]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
+    _write(HOSTILE_FIX, "customer",
+           {"c_custkey": list(range(1, n_c + 1)),
+            "c_name": HS[:n_c],
+            "c_nationkey": [k % 3 for k in range(n_c)],
+            "c_acctbal": [100.0 + 25.0 * k for k in range(n_c)],
+            # two in-domain segments + hostile extras (else-branch fodder)
+            "c_mktsegment": ["BUILDING", "MACHINERY", HS[0], HS[2],
+                             HS[7], HS[8], HS[12], HS[14]]})
+    _write(HOSTILE_FIX, "supplier",
+           {"s_suppkey": [1, 2], "s_name": [HS[1], HS[9]],
+            "s_nationkey": [0, 1], "s_acctbal": [50.0, 75.0]})
+    _write(HOSTILE_FIX, "part",
+           {"p_partkey": [1, 2, 3, 4],
+            "p_name": [HS[15], HS[4], "green part", HS[13]],
+            "p_brand": ["Brand#11", HS[8], "Brand#12", HS[6]],
+            "p_type": ["ECONOMY BRASS", HS[3], HS[10], "PROMO STEEL"],
+            "p_size": [10, 20, 30, 40],
+            "p_retailprice": [900.0, 800.0, 700.0, 600.0]})
     n_o = 10
-    write("orders",
-          {"o_orderkey": list(range(1, n_o + 1)),
-           "o_custkey": [1 + k % n_c for k in range(n_o)],
-           "o_orderstatus": ["F", "O", "P", "F", "O", "F", "O", "P", "F", "O"],
-           "o_totalprice": [1000.0 + 250.0 * k for k in range(n_o)],
-           "o_orderdate": [D + dt.timedelta(days=11 * k) for k in range(n_o)],
-           # three in-domain priorities + hostile extras
-           "o_orderpriority": ["1-URGENT", "2-HIGH", "3-MEDIUM", HS[0],
-                               HS[2], HS[6], HS[7], HS[11], HS[12], HS[15]]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")),
-           ("o_orderpriority", pa.string())])
+    _write(HOSTILE_FIX, "orders",
+           {"o_orderkey": list(range(1, n_o + 1)),
+            "o_custkey": [1 + k % n_c for k in range(n_o)],
+            "o_orderstatus": ["F", "O", "P", "F", "O", "F", "O", "P", "F", "O"],
+            "o_totalprice": [1000.0 + 250.0 * k for k in range(n_o)],
+            "o_orderdate": [D + dt.timedelta(days=11 * k) for k in range(n_o)],
+            # three in-domain priorities + hostile extras
+            "o_orderpriority": ["1-URGENT", "2-HIGH", "3-MEDIUM", HS[0],
+                                HS[2], HS[6], HS[7], HS[11], HS[12], HS[15]]})
     n_li = 12
-    write("lineitem",
-          {"l_orderkey": [1, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 10],
-           "l_partkey": [1 + k % 4 for k in range(n_li)],
-           "l_suppkey": [1 + k % 2 for k in range(n_li)],
-           "l_linenumber": [1, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 2],
-           "l_quantity": [5.0 + k for k in range(n_li)],
-           "l_extendedprice": [500.0 + 125.0 * k for k in range(n_li)],
-           "l_discount": [[0.0, 0.05, 0.09][k % 3] for k in range(n_li)],
-           "l_tax": [[0.0, 0.02][k % 2] for k in range(n_li)],
-           "l_returnflag": [["N", "A", "R"][k % 3] for k in range(n_li)],
-           "l_linestatus": [["O", "F"][k % 2] for k in range(n_li)],
-           "l_shipdate": [D + dt.timedelta(days=11 * (k % 10) + 3)
-                          for k in range(n_li)]},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    _write(HOSTILE_FIX, "lineitem",
+           {"l_orderkey": [1, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 10],
+            "l_partkey": [1 + k % 4 for k in range(n_li)],
+            "l_suppkey": [1 + k % 2 for k in range(n_li)],
+            "l_linenumber": [1, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 2],
+            "l_quantity": [5.0 + k for k in range(n_li)],
+            "l_extendedprice": [500.0 + 125.0 * k for k in range(n_li)],
+            "l_discount": [[0.0, 0.05, 0.09][k % 3] for k in range(n_li)],
+            "l_tax": [[0.0, 0.02][k % 2] for k in range(n_li)],
+            "l_returnflag": [["N", "A", "R"][k % 3] for k in range(n_li)],
+            "l_linestatus": [["O", "F"][k % 2] for k in range(n_li)],
+            "l_shipdate": [D + dt.timedelta(days=11 * (k % 10) + 3)
+                           for k in range(n_li)]})
     # events: in-domain types on half the rows (type-filter ops keep
     # their populations), hostile types + hostile JSON props on the rest
     n_ev = 16
@@ -856,16 +663,13 @@ def build_hostile_fixture() -> str:
         '{"k": 15, "s": "数据"}',
         '{"k": 16, "s": "percent%"}',
     ]
-    write("events",
-          {"event_id": list(range(1, n_ev + 1)),
-           "ts": [E + dt.timedelta(minutes=13 * k) for k in range(n_ev)],
-           "user_id": [7 + k % 4 for k in range(n_ev)],
-           "event_type": types,
-           "value": [10.0 + 5.0 * k for k in range(n_ev)],
-           "props": props},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    _write(HOSTILE_FIX, "events",
+           {"event_id": list(range(1, n_ev + 1)),
+            "ts": [E + dt.timedelta(minutes=13 * k) for k in range(n_ev)],
+            "user_id": [7 + k % 4 for k in range(n_ev)],
+            "event_type": types,
+            "value": [10.0 + 5.0 * k for k in range(n_ev)],
+            "props": props})
     # documents: hostile bodies AND hostile group keys (lang, source)
     d_texts = [
         "alpha beta gamma",
@@ -882,25 +686,20 @@ def build_hostile_fixture() -> str:
         "=SUM(A1:A9) injection body",
     ]
     nd = len(d_texts)
-    write("documents",
-          {"doc_id": list(range(1, nd + 1)),
-           "text": d_texts,
-           "lang": ["en", "en", HS[7], HS[6], "de", HS[0],
-                    "de", "zh", HS[12], "en", HS[14], "en"],
-           "source": ["src0", HS[1], "src1", HS[2], "src0", HS[9],
-                      "src1", HS[11], "src0", HS[4], "src1", HS[5]],
-           "n_chars": [len(t) for t in d_texts]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    _write(HOSTILE_FIX, "documents",
+           {"doc_id": list(range(1, nd + 1)),
+            "text": d_texts,
+            "lang": ["en", "en", HS[7], HS[6], "de", HS[0],
+                     "de", "zh", HS[12], "en", HS[14], "en"],
+            "source": ["src0", HS[1], "src1", HS[2], "src0", HS[9],
+                       "src1", HS[11], "src0", HS[4], "src1", HS[5]],
+            "n_chars": [len(t) for t in d_texts]})
     dim = 64
-    write("embeddings",
-          {"vec_id": list(range(4)),
-           "embedding": [[0.25 * ((k + j) % 5 - 2) for j in range(dim)]
-                         for k in range(4)],
-           "label": [0, 1, 0, 1]},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    _write(HOSTILE_FIX, "embeddings",
+           {"vec_id": list(range(4)),
+            "embedding": [[0.25 * ((k + j) % 5 - 2) for j in range(dim)]
+                          for k in range(4)],
+            "label": [0, 1, 0, 1]})
     return HOSTILE_FIX
 
 
@@ -928,55 +727,38 @@ def build_skew_fixture() -> str:
     columns are exact binary fractions (.0/.25/.5/.75) so divergences are
     logic, never float noise; every dimension value stays inside the
     production domain (event types, priorities, flags, brands)."""
-    os.makedirs(SKEW_FIX, exist_ok=True)
     D0 = dt.datetime(1996, 1, 1)
     E0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
-    def write(name, cols, schema):
-        tmp = f"{SKEW_FIX}/.{name}.parquet.tmp.{os.getpid()}"
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), tmp)
-        os.replace(tmp, f"{SKEW_FIX}/{name}.parquet")
-
-    write("region", {"r_regionkey": [0, 1], "r_name": ["AMERICA", "ASIA"]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": [0, 1, 2], "n_name": ["BRAZIL", "CHINA", "CANADA"],
-           "n_regionkey": [0, 1, 0]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
+    _write(SKEW_FIX, "region", {"r_regionkey": [0, 1], "r_name": ["AMERICA", "ASIA"]})
+    _write(SKEW_FIX, "nation",
+           {"n_nationkey": [0, 1, 2], "n_name": ["BRAZIL", "CHINA", "CANADA"],
+            "n_regionkey": [0, 1, 0]})
     n_cust = 10
-    write("customer",
-          {"c_custkey": list(range(1, n_cust + 1)),
-           "c_name": [f"Customer#{k}" for k in range(1, n_cust + 1)],
-           "c_nationkey": [k % 3 for k in range(n_cust)],
-           "c_acctbal": [100.0 + 25.25 * k for k in range(n_cust)],
-           "c_mktsegment": [["BUILDING", "MACHINERY", "AUTOMOBILE",
-                             "HOUSEHOLD", "FURNITURE"][k % 5]
-                            for k in range(n_cust)]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
+    _write(SKEW_FIX, "customer",
+           {"c_custkey": list(range(1, n_cust + 1)),
+            "c_name": [f"Customer#{k}" for k in range(1, n_cust + 1)],
+            "c_nationkey": [k % 3 for k in range(n_cust)],
+            "c_acctbal": [100.0 + 25.25 * k for k in range(n_cust)],
+            "c_mktsegment": [["BUILDING", "MACHINERY", "AUTOMOBILE",
+                              "HOUSEHOLD", "FURNITURE"][k % 5]
+                             for k in range(n_cust)]})
     n_supp = 4
-    write("supplier",
-          {"s_suppkey": list(range(1, n_supp + 1)),
-           "s_name": [f"Supplier#{k}" for k in range(1, n_supp + 1)],
-           "s_nationkey": [k % 3 for k in range(n_supp)],
-           "s_acctbal": [50.0 + 12.5 * k for k in range(n_supp)]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
+    _write(SKEW_FIX, "supplier",
+           {"s_suppkey": list(range(1, n_supp + 1)),
+            "s_name": [f"Supplier#{k}" for k in range(1, n_supp + 1)],
+            "s_nationkey": [k % 3 for k in range(n_supp)],
+            "s_acctbal": [50.0 + 12.5 * k for k in range(n_supp)]})
     n_part = 6
-    write("part",
-          {"p_partkey": list(range(1, n_part + 1)),
-           "p_name": [f"{c} part" for c in
-                      ("green", "red", "blue", "ivory", "plum", "tan")],
-           "p_brand": [f"Brand#{10 + k % 3}" for k in range(n_part)],
-           "p_type": [["ECONOMY BRASS", "PROMO STEEL", "STANDARD TIN"][k % 3]
-                      for k in range(n_part)],
-           "p_size": [5 * (k + 1) for k in range(n_part)],
-           "p_retailprice": [900.0 + 50.25 * k for k in range(n_part)]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
+    _write(SKEW_FIX, "part",
+           {"p_partkey": list(range(1, n_part + 1)),
+            "p_name": [f"{c} part" for c in
+                       ("green", "red", "blue", "ivory", "plum", "tan")],
+            "p_brand": [f"Brand#{10 + k % 3}" for k in range(n_part)],
+            "p_type": [["ECONOMY BRASS", "PROMO STEEL", "STANDARD TIN"][k % 3]
+                       for k in range(n_part)],
+            "p_size": [5 * (k + 1) for k in range(n_part)],
+            "p_retailprice": [900.0 + 50.25 * k for k in range(n_part)]})
     # orders: 120 rows, customer 1 owns the first 60 (50%); the hot
     # half also concentrates on ONE order date (1997-06-15)
     n_o = 120
@@ -984,19 +766,15 @@ def build_skew_fixture() -> str:
     o_cust = [1] * 60 + [2 + k % (n_cust - 1) for k in range(60)]
     o_date = [HOT_D if k < 60 else D0 + dt.timedelta(days=7 * k % 900)
               for k in range(n_o)]
-    write("orders",
-          {"o_orderkey": list(range(1, n_o + 1)),
-           "o_custkey": o_cust,
-           "o_orderstatus": [["F", "O", "P"][k % 3] for k in range(n_o)],
-           "o_totalprice": [1000.0 + 250.25 * (k % 40) for k in range(n_o)],
-           "o_orderdate": o_date,
-           "o_orderpriority": [["1-URGENT", "2-HIGH", "3-MEDIUM",
-                                "4-NOT SPECIFIED", "5-LOW"][k % 5]
-                               for k in range(n_o)]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")),
-           ("o_orderpriority", pa.string())])
+    _write(SKEW_FIX, "orders",
+           {"o_orderkey": list(range(1, n_o + 1)),
+            "o_custkey": o_cust,
+            "o_orderstatus": [["F", "O", "P"][k % 3] for k in range(n_o)],
+            "o_totalprice": [1000.0 + 250.25 * (k % 40) for k in range(n_o)],
+            "o_orderdate": o_date,
+            "o_orderpriority": [["1-URGENT", "2-HIGH", "3-MEDIUM",
+                                 "4-NOT SPECIFIED", "5-LOW"][k % 5]
+                                for k in range(n_o)]})
     # lineitem: 240 rows — order 1 carries a 30-line fanout; part 1 and
     # supplier 1 each appear in ~50% of lines
     li_ok, li_pk, li_sk, li_ln = [], [], [], []
@@ -1009,25 +787,19 @@ def build_skew_fixture() -> str:
         li_pk.append(1 if i % 2 == 0 else 2 + i % (n_part - 1))
         li_sk.append(1 if i % 2 == 0 else 2 + i % (n_supp - 1))
     odate_by_key = {k + 1: o_date[k] for k in range(n_o)}
-    write("lineitem",
-          {"l_orderkey": li_ok,
-           "l_partkey": li_pk,
-           "l_suppkey": li_sk,
-           "l_linenumber": li_ln,
-           "l_quantity": [1.0 + (i % 50) for i in range(240)],
-           "l_extendedprice": [500.0 + 125.25 * (i % 80) for i in range(240)],
-           "l_discount": [[0.0, 0.02, 0.05, 0.09][i % 4] for i in range(240)],
-           "l_tax": [[0.0, 0.02, 0.05][i % 3] for i in range(240)],
-           "l_returnflag": [["N", "A", "R"][i % 3] for i in range(240)],
-           "l_linestatus": [["O", "F"][i % 2] for i in range(240)],
-           "l_shipdate": [odate_by_key[li_ok[i]] + dt.timedelta(days=i % 60)
-                          for i in range(240)]},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    _write(SKEW_FIX, "lineitem",
+           {"l_orderkey": li_ok,
+            "l_partkey": li_pk,
+            "l_suppkey": li_sk,
+            "l_linenumber": li_ln,
+            "l_quantity": [1.0 + (i % 50) for i in range(240)],
+            "l_extendedprice": [500.0 + 125.25 * (i % 80) for i in range(240)],
+            "l_discount": [[0.0, 0.02, 0.05, 0.09][i % 4] for i in range(240)],
+            "l_tax": [[0.0, 0.02, 0.05][i % 3] for i in range(240)],
+            "l_returnflag": [["N", "A", "R"][i % 3] for i in range(240)],
+            "l_linestatus": [["O", "F"][i % 2] for i in range(240)],
+            "l_shipdate": [odate_by_key[li_ok[i]] + dt.timedelta(days=i % 60)
+                           for i in range(240)]})
     # events: 400 rows — user 7 owns 50%, day 2024-01-05 holds 50%,
     # 'click' takes ~60% of types; all five production types present
     n_ev = 400
@@ -1040,16 +812,13 @@ def build_skew_fixture() -> str:
              if k % 2 == 0
              else E0 + dt.timedelta(days=k % 29, minutes=11 * k % 1440)
              for k in range(n_ev)]
-    write("events",
-          {"event_id": list(range(1, n_ev + 1)),
-           "ts": ev_ts,
-           "user_id": ev_user,
-           "event_type": ev_type,
-           "value": [0.25 * (1 + k % 400) for k in range(n_ev)],
-           "props": [f'{{"k": {k}}}' for k in range(1, n_ev + 1)]},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    _write(SKEW_FIX, "events",
+           {"event_id": list(range(1, n_ev + 1)),
+            "ts": ev_ts,
+            "user_id": ev_user,
+            "event_type": ev_type,
+            "value": [0.25 * (1 + k % 400) for k in range(n_ev)],
+            "props": [f'{{"k": {k}}}' for k in range(1, n_ev + 1)]})
     # documents: 40 rows — one text repeats 10x (dup cluster), src0
     # supplies 50%, 'en' dominates lang
     base_texts = [
@@ -1065,17 +834,14 @@ def build_skew_fixture() -> str:
     hot_text = "the viral duplicate document body repeated verbatim"
     d_texts = [hot_text] * 10 + base_texts
     nd = len(d_texts)
-    write("documents",
-          {"doc_id": list(range(1, nd + 1)),
-           "text": d_texts,
-           "lang": [("en" if k % 4 < 3 else ["de", "fr", "es", "zh"][k % 4])
-                    for k in range(nd)],
-           "source": [("src0" if k % 2 == 0 else f"src{1 + k % 6}")
-                      for k in range(nd)],
-           "n_chars": [len(t) for t in d_texts]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    _write(SKEW_FIX, "documents",
+           {"doc_id": list(range(1, nd + 1)),
+            "text": d_texts,
+            "lang": [("en" if k % 4 < 3 else ["de", "fr", "es", "zh"][k % 4])
+                     for k in range(nd)],
+            "source": [("src0" if k % 2 == 0 else f"src{1 + k % 6}")
+                       for k in range(nd)],
+            "n_chars": [len(t) for t in d_texts]})
     # embeddings: 60 rows — label 0 covers 50% including an identical
     # 12-vector cluster (the ANN hot bucket)
     dim = 64
@@ -1088,10 +854,8 @@ def build_skew_fixture() -> str:
         else:
             vecs.append([0.25 * ((k * 7 + j * 3) % 9 - 4) for j in range(dim)])
             labels.append(0 if k < 30 else 1 + k % 9)
-    write("embeddings",
-          {"vec_id": list(range(60)), "embedding": vecs, "label": labels},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    _write(SKEW_FIX, "embeddings",
+           {"vec_id": list(range(60)), "embedding": vecs, "label": labels})
     return SKEW_FIX
 
 
@@ -1118,82 +882,56 @@ def build_nonfinite_fixture() -> str:
     (guarded → non-finite behaves as NULL: skipped by sums, null
     display — the only semantics that degrade gracefully per-row
     instead of aborting per-job)."""
-    os.makedirs(NONFINITE_FIX, exist_ok=True)
     D = dt.datetime(1996, 6, 15)
     E = dt.datetime(2024, 1, 5, 12, 0, 0)
     NAN, INF = float("nan"), float("inf")
 
-    def write(name, cols, schema):
-        tmp = f"{NONFINITE_FIX}/.{name}.parquet.tmp.{os.getpid()}"
-        pq.write_table(pa.table(cols, schema=pa.schema(schema)), tmp)
-        os.replace(tmp, f"{NONFINITE_FIX}/{name}.parquet")
-
-    write("region", {"r_regionkey": [0, 1], "r_name": ["AMERICA", "ASIA"]},
-          [("r_regionkey", pa.int32()), ("r_name", pa.string())])
-    write("nation",
-          {"n_nationkey": [0, 1], "n_name": ["BRAZIL", "CHINA"],
-           "n_regionkey": [0, 1]},
-          [("n_nationkey", pa.int32()), ("n_name", pa.string()),
-           ("n_regionkey", pa.int32())])
+    _write(NONFINITE_FIX, "region",
+           {"r_regionkey": [0, 1], "r_name": ["AMERICA", "ASIA"]})
+    _write(NONFINITE_FIX, "nation",
+           {"n_nationkey": [0, 1], "n_name": ["BRAZIL", "CHINA"],
+            "n_regionkey": [0, 1]})
     # -0.0 / 0.0 pair inside one nation: any op grouping or ranking on
     # acctbal must treat them equal (both engines do) and any DISPLAY
     # must not leak the sign bit into the hash
-    write("customer",
-          {"c_custkey": [1, 2, 3, 4],
-           "c_name": [f"Customer#{k}" for k in range(1, 5)],
-           "c_nationkey": [0, 0, 1, 1],
-           "c_acctbal": [100.0, -0.0, 250.0, 0.0],
-           "c_mktsegment": ["BUILDING", "BUILDING", "MACHINERY", "MACHINERY"]},
-          [("c_custkey", pa.int64()), ("c_name", pa.string()),
-           ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
-           ("c_mktsegment", pa.string())])
-    write("supplier",
-          {"s_suppkey": [1, 2], "s_name": ["Supplier#1", "Supplier#2"],
-           "s_nationkey": [0, 1], "s_acctbal": [50.0, -0.0]},
-          [("s_suppkey", pa.int64()), ("s_name", pa.string()),
-           ("s_nationkey", pa.int32()), ("s_acctbal", pa.float64())])
-    write("part",
-          {"p_partkey": [1, 2, 3], "p_name": ["green part", "red part", "blue part"],
-           "p_brand": ["Brand#11", "Brand#12", "Brand#11"],
-           "p_type": ["ECONOMY BRASS", "PROMO STEEL", "STANDARD TIN"],
-           "p_size": [10, 15, 20], "p_retailprice": [900.0, 800.0, 700.0]},
-          [("p_partkey", pa.int64()), ("p_name", pa.string()),
-           ("p_brand", pa.string()), ("p_type", pa.string()),
-           ("p_size", pa.int32()), ("p_retailprice", pa.float64())])
+    _write(NONFINITE_FIX, "customer",
+           {"c_custkey": [1, 2, 3, 4],
+            "c_name": [f"Customer#{k}" for k in range(1, 5)],
+            "c_nationkey": [0, 0, 1, 1],
+            "c_acctbal": [100.0, -0.0, 250.0, 0.0],
+            "c_mktsegment": ["BUILDING", "BUILDING", "MACHINERY", "MACHINERY"]})
+    _write(NONFINITE_FIX, "supplier",
+           {"s_suppkey": [1, 2], "s_name": ["Supplier#1", "Supplier#2"],
+            "s_nationkey": [0, 1], "s_acctbal": [50.0, -0.0]})
+    _write(NONFINITE_FIX, "part",
+           {"p_partkey": [1, 2, 3], "p_name": ["green part", "red part", "blue part"],
+            "p_brand": ["Brand#11", "Brand#12", "Brand#11"],
+            "p_type": ["ECONOMY BRASS", "PROMO STEEL", "STANDARD TIN"],
+            "p_size": [10, 15, 20], "p_retailprice": [900.0, 800.0, 700.0]})
     n_o = 8
-    write("orders",
-          {"o_orderkey": list(range(1, n_o + 1)),
-           "o_custkey": [1, 1, 2, 2, 3, 3, 4, 4],
-           "o_orderstatus": ["F", "O", "F", "O", "F", "O", "F", "O"],
-           "o_totalprice": [1000.0, 1300.0, 1200.0, 800.0,
-                            950.0, 1500.0, 900.0, 1100.0],
-           "o_orderdate": [D + dt.timedelta(days=k) for k in range(n_o)],
-           "o_orderpriority": ["3-MEDIUM", "1-URGENT", "2-HIGH", "3-MEDIUM",
-                               "2-HIGH", "1-URGENT", "1-URGENT", "3-MEDIUM"]},
-          [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
-           ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
-           ("o_orderdate", pa.timestamp("us")),
-           ("o_orderpriority", pa.string())])
+    _write(NONFINITE_FIX, "orders",
+           {"o_orderkey": list(range(1, n_o + 1)),
+            "o_custkey": [1, 1, 2, 2, 3, 3, 4, 4],
+            "o_orderstatus": ["F", "O", "F", "O", "F", "O", "F", "O"],
+            "o_totalprice": [1000.0, 1300.0, 1200.0, 800.0,
+                             950.0, 1500.0, 900.0, 1100.0],
+            "o_orderdate": [D + dt.timedelta(days=k) for k in range(n_o)],
+            "o_orderpriority": ["3-MEDIUM", "1-URGENT", "2-HIGH", "3-MEDIUM",
+                                "2-HIGH", "1-URGENT", "1-URGENT", "3-MEDIUM"]})
     n_li = 10
-    write("lineitem",
-          {"l_orderkey": [1, 1, 2, 3, 4, 5, 6, 7, 8, 8],
-           "l_partkey": [1, 2, 1, 2, 3, 3, 1, 2, 3, 1],
-           "l_suppkey": [1, 2, 1, 2, 1, 2, 1, 2, 1, 2],
-           "l_linenumber": [1, 2, 1, 1, 1, 1, 1, 1, 1, 2],
-           "l_quantity": [5.0, 2.0, 3.0, 7.0, 4.0, 2.0, 4.0, 6.0, 1.0, 8.0],
-           "l_extendedprice": [500.0, 300.0, 450.0, 700.0, 200.0,
-                               350.0, 400.0, 600.0, 100.0, 800.0],
-           "l_discount": [0.05, 0.0, 0.1, 0.08, 0.02, 0.0, 0.07, 0.01, 0.0, 0.04],
-           "l_tax": [0.02, 0.01, 0.0, 0.03, 0.0, 0.01, 0.04, 0.02, 0.0, 0.05],
-           "l_returnflag": ["N", "N", "A", "R", "R", "N", "A", "R", "N", "A"],
-           "l_linestatus": ["O", "F", "O", "F", "O", "F", "O", "F", "O", "F"],
-           "l_shipdate": [D + dt.timedelta(days=k) for k in range(n_li)]},
-          [("l_orderkey", pa.int64()), ("l_partkey", pa.int64()),
-           ("l_suppkey", pa.int64()), ("l_linenumber", pa.int32()),
-           ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-           ("l_discount", pa.float64()), ("l_tax", pa.float64()),
-           ("l_returnflag", pa.string()), ("l_linestatus", pa.string()),
-           ("l_shipdate", pa.timestamp("us"))])
+    _write(NONFINITE_FIX, "lineitem",
+           {"l_orderkey": [1, 1, 2, 3, 4, 5, 6, 7, 8, 8],
+            "l_partkey": [1, 2, 1, 2, 3, 3, 1, 2, 3, 1],
+            "l_suppkey": [1, 2, 1, 2, 1, 2, 1, 2, 1, 2],
+            "l_linenumber": [1, 2, 1, 1, 1, 1, 1, 1, 1, 2],
+            "l_quantity": [5.0, 2.0, 3.0, 7.0, 4.0, 2.0, 4.0, 6.0, 1.0, 8.0],
+            "l_extendedprice": [500.0, 300.0, 450.0, 700.0, 200.0,
+                                350.0, 400.0, 600.0, 100.0, 800.0],
+            "l_discount": [0.05, 0.0, 0.1, 0.08, 0.02, 0.0, 0.07, 0.01, 0.0, 0.04],
+            "l_tax": [0.02, 0.01, 0.0, 0.03, 0.0, 0.01, 0.04, 0.02, 0.0, 0.05],
+            "l_returnflag": ["N", "N", "A", "R", "R", "N", "A", "R", "N", "A"],
+            "l_linestatus": ["O", "F", "O", "F", "O", "F", "O", "F", "O", "F"],
+            "l_shipdate": [D + dt.timedelta(days=k) for k in range(n_li)]})
     # events.value is THE generic metric: day 1 all-finite (control),
     # day 2 contains one NaN among finite ticks, day 3 carries +Inf and
     # -Inf (their sum is NaN — the worst case for naive day totals),
@@ -1204,43 +942,35 @@ def build_nonfinite_fixture() -> str:
            + [E + dt.timedelta(days=1, minutes=19 * k) for k in range(3)]
            + [E + dt.timedelta(days=2, minutes=23 * k) for k in range(3)]
            + [E + dt.timedelta(days=3, minutes=29 * k) for k in range(3)])
-    write("events",
-          {"event_id": list(range(1, n_ev + 1)),
-           "ts": EVT,
-           "user_id": [7, 8, 9, 7, 8, 9, 7, 8, 9, 7, 8, 9],
-           "event_type": ["click", "purchase", "view",
-                          "click", "purchase", "view",
-                          "purchase", "click", "view",
-                          "purchase", "view", "click"],
-           "value": [10.0, 30.0, 20.0,          # day 1: finite control
-                     5.0, NAN, 15.0,            # day 2: NaN among finite
-                     INF, -INF, 25.0,           # day 3: +/-Inf (sum -> NaN)
-                     -0.0, 0.0, -0.0],          # day 4: signed zeros
-           "props": [f'{{"k": {k}}}' for k in range(1, n_ev + 1)]},
-          [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-           ("user_id", pa.int64()), ("event_type", pa.string()),
-           ("value", pa.float64()), ("props", pa.string())])
+    _write(NONFINITE_FIX, "events",
+           {"event_id": list(range(1, n_ev + 1)),
+            "ts": EVT,
+            "user_id": [7, 8, 9, 7, 8, 9, 7, 8, 9, 7, 8, 9],
+            "event_type": ["click", "purchase", "view",
+                           "click", "purchase", "view",
+                           "purchase", "click", "view",
+                           "purchase", "view", "click"],
+            "value": [10.0, 30.0, 20.0,          # day 1: finite control
+                      5.0, NAN, 15.0,            # day 2: NaN among finite
+                      INF, -INF, 25.0,           # day 3: +/-Inf (sum -> NaN)
+                      -0.0, 0.0, -0.0],          # day 4: signed zeros
+            "props": [f'{{"k": {k}}}' for k in range(1, n_ev + 1)]})
     t = ["alpha beta gamma", "delta epsilon zeta", "alpha beta gamma",
          "eta theta iota kappa"]
-    write("documents",
-          {"doc_id": [1, 2, 3, 4], "text": t,
-           "lang": ["en", "de", "en", "en"],
-           "source": ["src0", "src1", "src0", "src1"],
-           "n_chars": [len(x) for x in t]},
-          [("doc_id", pa.int64()), ("text", pa.string()),
-           ("lang", pa.string()), ("source", pa.string()),
-           ("n_chars", pa.int64())])
+    _write(NONFINITE_FIX, "documents",
+           {"doc_id": [1, 2, 3, 4], "text": t,
+            "lang": ["en", "de", "en", "en"],
+            "source": ["src0", "src1", "src0", "src1"],
+            "n_chars": [len(x) for x in t]})
     dim = 64
     vecs = [[0.5] * dim,
             [NAN if j == 7 else 0.25 for j in range(dim)],   # NaN element
             [INF if j == 3 else 0.1 for j in range(dim)],    # +Inf element
             [-0.0] * dim,                                    # signed zeros
             [v / 100.0 for v in range(dim)]]
-    write("embeddings",
-          {"vec_id": [0, 1, 2, 3, 4], "embedding": vecs,
-           "label": [0, 1, 0, 1, 0]},
-          [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
-           ("label", pa.int32())])
+    _write(NONFINITE_FIX, "embeddings",
+           {"vec_id": [0, 1, 2, 3, 4], "embedding": vecs,
+            "label": [0, 1, 0, 1, 0]})
     return NONFINITE_FIX
 
 
@@ -1261,31 +991,28 @@ EMPTY_EXPECTED_DIVERGE = {
 }
 
 
+# CLI flag -> regime fixture function (first flag given wins; none:
+# build_fixture)
+_REGIMES = {
+    "--empty": build_empty_fixture,
+    "--single": build_single_fixture,
+    "--nulls": build_nulls_fixture,
+    "--extreme": build_extreme_fixture,
+    "--boundary": build_boundary_fixture,
+    "--shuffled": build_shuffled_fixture,
+    "--skew": build_skew_fixture,
+    "--hostile": build_hostile_fixture,
+    "--nonfinite": build_nonfinite_fixture,
+}
+
+
 def main() -> None:
     only = None
     if "--only" in sys.argv:
         only = set(sys.argv[sys.argv.index("--only") + 1].split(","))
 
-    if "--empty" in sys.argv:
-        fix = build_empty_fixture()
-    elif "--single" in sys.argv:
-        fix = build_single_fixture()
-    elif "--nulls" in sys.argv:
-        fix = build_nulls_fixture()
-    elif "--extreme" in sys.argv:
-        fix = build_extreme_fixture()
-    elif "--boundary" in sys.argv:
-        fix = build_boundary_fixture()
-    elif "--shuffled" in sys.argv:
-        fix = build_shuffled_fixture()
-    elif "--skew" in sys.argv:
-        fix = build_skew_fixture()
-    elif "--hostile" in sys.argv:
-        fix = build_hostile_fixture()
-    elif "--nonfinite" in sys.argv:
-        fix = build_nonfinite_fixture()
-    else:
-        fix = build_fixture()
+    flag = next((f for f in _REGIMES if f in sys.argv), None)
+    fix = _REGIMES.get(flag, build_fixture)()
     from carpet_spark.registry import REGISTRY
     from carpet_spark.session import get_spark
     from carpet_spark.testing import compare, duck_connect
@@ -1293,7 +1020,7 @@ def main() -> None:
     spark = get_spark("degenerate_sweep")
     con = duck_connect(fix)
 
-    is_empty = "--empty" in sys.argv
+    is_empty = flag == "--empty"
     names = sorted(n for n, op in REGISTRY.items() if op.oracle is not None)
     if only:
         names = [n for n in names if n in only]

@@ -6,6 +6,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE
 from carpet_spark.session import get_spark
 from carpet_spark.testing import duck_connect
 
@@ -40,12 +41,8 @@ _DURATIONS_FILE = os.path.join(
 # the selected and deselected counts and how to run the full gate.
 # ---------------------------------------------------------------------------
 
-# headline bench ops (bench.py HEADLINE values) — always in the fast set
-_FAST_ALWAYS_OPS = {
-    "agg_groupby", "q3_top_orders", "join_multiway", "win_rank", "topk",
-    "distinct_users", "text_tokenize_wordcount", "stream_tumbling",
-    "dedup_exact",
-}
+# headline bench ops — always in the fast set
+_FAST_ALWAYS_OPS = set(HEADLINE.values())
 # ops touched by the r12 optimization round — parity stays driver-checked
 _FAST_ALWAYS_OPS |= {
     "dedup_near_embedding_ann", "sim_knn_join_topk", "sim_mmr_rerank",

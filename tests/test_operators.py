@@ -345,9 +345,10 @@ def test_scan_avro_from_any_working_directory(tmp_path):
 
 
 def test_sink_ops_leave_no_temp_dirs(tmp_path):
-    """Sink and fixture dirs live under one per-process root that is removed
-    at interpreter exit: a process that ran sink ops leaves its TMPDIR as
-    it found it."""
+    """Sink, fixture, stream-staging and checkpoint dirs live under
+    per-process roots that are removed at interpreter exit: a process that
+    ran sink and streaming ops leaves its TMPDIR and SPARK_GRAFT_CKPT_DIR
+    as it found them."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     tmp = tmp_path / "tmp"
     tmp.mkdir()
@@ -357,15 +358,17 @@ def test_sink_ops_leave_no_temp_dirs(tmp_path):
         "from carpet_spark.registry import REGISTRY\n"
         "from carpet_spark.session import get_spark\n"
         "spark = get_spark('sink_cleanup', cpus=1)\n"
-        "for op in ('sink_parquet_roundtrip', 'sink_avro_roundtrip'):\n"
+        "for op in ('sink_parquet_roundtrip', 'sink_avro_roundtrip',\n"
+        "           'stream_dedup_watermark'):\n"
         f"    print(REGISTRY[op].fn(spark, {SF_SMOKE!r}).count())\n"
         "spark.stop()\n"
     )
-    env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_DRIVER_MEM="1g")
+    env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_CKPT_DIR=str(tmp),
+               SPARK_GRAFT_DRIVER_MEM="1g")
     r = subprocess.run(
         [sys.executable, "-c", code], cwd=tmp_path, env=env,
         capture_output=True, text=True, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-3000:]
-    assert all(int(n) > 0 for n in r.stdout.split()[-2:])
+    assert all(int(n) > 0 for n in r.stdout.split()[-3:])
     assert os.listdir(tmp) == []

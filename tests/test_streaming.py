@@ -332,23 +332,19 @@ def test_foreach_batch_idempotent_sink(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_stream_static_join_incremental(spark):
+def test_stream_static_join_incremental(spark, tmp_path):
     """stream_static_join's true incremental run: the stream side arrives
     as a readStream over the events parquet; every micro-batch row must
     pick up its customer attributes, and the total must equal the batch
     twin's count (stateless join — no rows buffered or dropped)."""
-    import uuid as _uuid
-
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     sf = "/root/testdata/sf0.001"
-    name = f"ssj_{_uuid.uuid4().hex[:8]}"
+    name = f"ssj_{uuid.uuid4().hex[:8]}"
     # readStream needs a directory source; the fixture is a single file
-    src = _tempfile.mkdtemp(prefix="ssj_src_")
-    _shutil.copy(f"{sf}/events.parquet", os.path.join(src, "events.parquet"))
+    src = tmp_path / "ssj_src"
+    src.mkdir()
+    shutil.copy(f"{sf}/events.parquet", src / "events.parquet")
     ev_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = spark.readStream.schema(ev_schema).parquet(src)
+    stream = spark.readStream.schema(ev_schema).parquet(str(src))
     c = spark.read.parquet(f"{sf}/customer.parquet")
     import pyspark.sql.functions as F
 
