@@ -110,6 +110,20 @@ def get_spark(app_name: str = "carpet_spark", cpus: int | None = None) -> SparkS
         # with spark.conf.set on the returned session.
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.hadoop.parquet.compression.codec.zstd.level", "1")
+        # Generated-code cache sized to the working set.  Spark's default of
+        # 100 entries is a Guava cache split into 4 LRU segments of about
+        # 25; the nine bench.HEADLINE queries cycle through 94 distinct
+        # generated sources in a fixed order, so a segment holding more
+        # than 25 of them misses on every access and janino recompiles
+        # byte-identical source each pass (4 vCPU: 28 compiles a pass on
+        # the perfbench headline inputs, 42-54 at sf0.001, about 320 ms of
+        # janino time on the query threads plus the C2 JIT of every
+        # reloaded class).  At 1000: 0 compiles a steady-state pass, JVM
+        # CPU 4.6-5.2 s -> 3.5-3.7 s a pass, Metaspace 222 -> 229 MB after
+        # two sweeps of 110 registry ops.  Static SQL conf: the JVM sizes
+        # the cache once, at its first code generation, so it is a builder
+        # conf, not RUNTIME_CONFS; a session built elsewhere keeps 100.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

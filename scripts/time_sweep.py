@@ -6,7 +6,8 @@ runtime ReuseExchange dedups identical subtrees, so plan-text counts
 overstate real cost (measured: the graph ops' shared edge list).  This
 sweep measures what actually matters — seconds per op at a given SF —
 and writes one JSON line per op (append-mode, partial-run safe) so the
-optimization round can rank by measured time.
+optimization round can rank by measured time: ``sec`` (best of --runs)
+and ``compiles`` (janino compiles during the timed runs).
 
 Usage: python scripts/time_sweep.py [--sf-dir DIR] [--runs N] [--ops a,b]
        [--out FILE] [--warm]
@@ -41,8 +42,10 @@ def main() -> None:
     args = ap.parse_args()
 
     ops = [o for o in args.ops.split(",") if o] or sorted(REGISTRY)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 4)
-    spark = get_spark("carpet_time_sweep", cpus=cpus)
+    spark = get_spark("carpet_time_sweep")
+    # janino compiles (cumulative, JVM-wide); per op, the count over its
+    # timed runs: with --warm, 0 means they ran on cached generated code
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     noop(REGISTRY["agg_groupby"].fn(spark, args.sf_dir).limit(1))  # session warmup
 
     done = set()
@@ -65,11 +68,13 @@ def main() -> None:
                 if args.warm:
                     noop(fn(spark, args.sf_dir))
                 best = float("inf")
+                c0 = compiles.getCount()
                 for _ in range(args.runs):
                     t0 = time.perf_counter()
                     noop(fn(spark, args.sf_dir))
                     best = min(best, time.perf_counter() - t0)
                 rec["sec"] = round(best, 3)
+                rec["compiles"] = compiles.getCount() - c0
             except Exception as e:  # record and keep sweeping
                 rec["err"] = f"{type(e).__name__}: {e}"[:300]
             out.write(json.dumps(rec) + "\n")

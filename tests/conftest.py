@@ -191,7 +191,7 @@ def pytest_sessionfinish(session, exitstatus):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("carpet_spark_tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    s = get_spark("carpet_spark_tests")
     yield s
 
 

@@ -8,7 +8,9 @@ import io
 
 import pytest
 
+from bench import HEADLINE
 from carpet_spark.registry import REGISTRY
+from conftest import SF_SMOKE
 
 
 def explain_str(df, mode: str = "formatted") -> str:
@@ -819,3 +821,20 @@ def test_agg_percentile_scans_lineitem_once(spark, sf_dir):
     df = REGISTRY["agg_percentile"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 1, plan
+
+
+def test_repeated_headline_pass_compiles_nothing(spark):
+    """A second pass over the nine headline queries reuses the generated
+    code of the first: the codegen cache holds their working set (94
+    distinct sources), so janino compiles nothing.  At Spark's default of
+    100 entries the second pass recompiled 42 classes of byte-identical
+    source (4 cores; the count varies from run to run)."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ops = [REGISTRY[op].fn for op in HEADLINE.values()]
+    for fn in ops:
+        fn(spark, SF_SMOKE).toPandas()
+    before = compiles.getCount()
+    for fn in ops:
+        fn(spark, SF_SMOKE).toPandas()
+    recompiled = compiles.getCount() - before
+    assert recompiled == 0
